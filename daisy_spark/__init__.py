@@ -5,7 +5,8 @@ data-processing capabilities of the reference streaming time-series DBMS
 Architecture (Spark-first, NOT a port):
 
 - ``session``    SparkSession factory + settings shim
-- ``catalog``    table registry (name -> path, schema, engine semantics)
+- ``catalog``    table resolution (name -> DataFrame, `_time` bound) and
+                 engine semantics (``TableSpec``)
 - ``functions``  scalar / aggregate / time-series function library
 - ``operators``  macro-operators Spark lacks natively (ASOF join, ANY join,
                  FINAL normalization, LIMIT BY, WITH FILL, WITH TOTALS,
@@ -22,6 +23,6 @@ to plan construction (never per-row execution on hot paths).
 """
 
 from daisy_spark.session import get_spark  # noqa: F401
-from daisy_spark.catalog import Catalog, TableSpec  # noqa: F401
+from daisy_spark.catalog import TableSpec  # noqa: F401
 
 __version__ = "0.1.0"

@@ -8,12 +8,11 @@ reads a `_time`-bearing table (src/Interpreters/AddTimeParamVisitor.cpp:
 84-119).
 
 Spark-first: rather than rewriting SQL text, the time predicate is
-applied AT THE SCAN — ``search`` registers time-bounded temp views for
-every `_time`-bearing table, then runs the (dialect-translated) query
-against them.  Catalyst pushes the bound into the parquet scan, and for
-the driver's nanosecond-timestamp events table the bound is applied to
-the RAW int64 column *before* the µs conversion, so it lands in
-``PushedFilters`` (a filter on the derived timestamp column would not).
+applied AT THE SCAN — ``search`` registers a temp view per table, each
+time-bounded by :func:`daisy_spark.catalog.load_table` where the table
+has a time column, then runs the (dialect-translated) query against
+them.  Catalyst pushes the bound into the parquet scan's
+``PushedFilters``.
 """
 
 from __future__ import annotations
@@ -22,25 +21,8 @@ import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from daisy_spark.catalog import (
-    TESTDATA_TABLES,
-    _ensure_nanos_readable,
-    normalize_nanos,
-)
-
-#: time column per test table (events uses `ts` as its `_time`)
-TIME_COLUMNS = {"events": "ts"}
-
-
-def _to_epoch_ns(t: str | _dt.datetime) -> int:
-    if isinstance(t, str):
-        t = _dt.datetime.fromisoformat(t)
-    if t.tzinfo is None:
-        t = t.replace(tzinfo=_dt.timezone.utc)
-    return int(t.timestamp() * 1_000_000) * 1000
+from daisy_spark.catalog import TESTDATA_TABLES, load_table, table_path
 
 
 def load_time_bounded(
@@ -50,29 +32,12 @@ def load_time_bounded(
     start_time: str | _dt.datetime | None = None,
     end_time: str | _dt.datetime | None = None,
 ) -> DataFrame:
-    """Load a table with the `_time` bound applied where the scan can use
-    it.  For nanos-encoded columns the filter runs on the raw int64 BEFORE
-    conversion — visible as PushedFilters in the parquet scan node."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    _ensure_nanos_readable(spark)
-    df = spark.read.parquet(path)
-    tcol = TIME_COLUMNS.get(name)
-    if tcol is None:
-        return normalize_nanos(name, df)
-    # branch on the ACTUAL stored type: the driver has shipped events.ts both
-    # as raw int64 nanos and as timestamp[us] parquet across rounds
-    if isinstance(df.schema[tcol].dataType, T.LongType):
-        if start_time is not None:
-            df = df.filter(F.col(tcol) >= F.lit(_to_epoch_ns(start_time)))
-        if end_time is not None:
-            df = df.filter(F.col(tcol) < F.lit(_to_epoch_ns(end_time)))
-        return normalize_nanos(name, df)
-    ttype = df.schema[tcol].dataType  # timestamp or timestamp_ntz
-    if start_time is not None:
-        df = df.filter(F.col(tcol) >= F.lit(str(start_time)).cast(ttype))
-    if end_time is not None:
-        df = df.filter(F.col(tcol) < F.lit(str(end_time)).cast(ttype))
-    return df
+    """Table ``name`` read from its parquet (never the bucketed mirror)
+    with the `_time` bound applied in the scan — see
+    :func:`daisy_spark.catalog.load_table`."""
+    return load_table(
+        spark, sf_dir, name, plain=True, start_time=start_time, end_time=end_time
+    )
 
 
 def search(
@@ -89,8 +54,7 @@ def search(
     from daisy_spark.plans import sql as dsql
 
     for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
+        if os.path.exists(table_path(sf_dir, t)):
             load_time_bounded(
                 spark, sf_dir, t, start_time, end_time
             ).createOrReplaceTempView(t)

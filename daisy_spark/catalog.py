@@ -1,4 +1,10 @@
-"""Table registry: name -> path, format, engine semantics.
+"""Table resolution and engine semantics.
+
+:func:`load_table` is the one path from a table name to a DataFrame.  It
+owns the ``<sf_dir>/<name>.parquet`` layout, the bucketed-mirror lookup,
+each table's time column with its search bound (the reference's `_time`
+auto-column — src/Server/RestRouterHandlers/TableRestRouterHandler.cpp:
+55-58), and the read of TIMESTAMP(NANOS) columns as µs timestamps.
 
 The reference's tables are IStorage implementations whose engine choice
 (MergeTree / ReplacingMergeTree / SummingMergeTree / ...) carries
@@ -6,20 +12,16 @@ The reference's tables are IStorage implementations whose engine choice
 registerStorageMergeTree.cpp:943-960).  In a Spark-first design the data
 lives in partitioned Parquet and the engine semantics become *read-time
 normalization rules* applied by :mod:`daisy_spark.operators.final` when a
-query asks for ``FINAL``.
-
-A :class:`TableSpec` records what the CREATE TABLE would have said:
-engine kind, ORDER BY key (the dedup/merge key), version column,
-sign column, partition expression, and TTL.  The Daisy conventions
-(`_time DateTime64(3)` auto-column, time-granularity partitioning —
-reference: src/Server/RestRouterHandlers/TableRestRouterHandler.cpp:55-58,
-309-333) are captured by ``time_column`` / ``partition_granularity``.
+query asks for ``FINAL``.  A :class:`TableSpec` records the engine part of
+what the CREATE TABLE would have said: engine kind, ORDER BY key (the
+dedup/merge key), version, sign, summed and aggregate columns.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,12 +41,16 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
+#: time column per table (events uses ``ts`` as its `_time`).  Test data
+#: has stored it both as timestamp[us] and as TIMESTAMP(NANOS), which
+#: Spark reads as long (spark.sql.legacy.parquet.nanosAsLong);
+#: :func:`load_table` branches on the stored type.
+TIME_COLUMNS = {"events": "ts"}
+
 
 @dataclass
 class TableSpec:
     name: str
-    path: str
-    fmt: str = "parquet"
     # engine semantics (read-time normalization under FINAL)
     engine: str = "MergeTree"  # MergeTree|Replacing|Summing|Aggregating|Collapsing|VersionedCollapsing
     order_by: tuple[str, ...] = ()  # dedup/merge key
@@ -56,75 +62,10 @@ class TableSpec:
     # shape heuristic.  Ordinary (undeclared) columns merge as FIRST
     # per the reference (AggregatingSortedAlgorithm::startGroup).
     agg_columns: dict[str, str] | None = None
-    # Daisy time conventions
-    time_column: str | None = None  # `_time`-equivalent event-time column
-    partition_granularity: str | None = None  # M | D | H | m (TableRestRouterHandler.cpp:55-58)
-    ttl: str | None = None  # e.g. "30 days" on time_column
-    options: dict[str, str] = field(default_factory=dict)
 
 
-class Catalog:
-    """In-memory registry mapping table names to specs + temp views."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.tables: dict[str, TableSpec] = {}
-
-    def register(self, spec: TableSpec, view: bool = True) -> None:
-        self.tables[spec.name] = spec
-        if view:
-            self.load(spec.name).createOrReplaceTempView(spec.name)
-
-    def load(self, name: str) -> DataFrame:
-        spec = self.tables[name]
-        _ensure_nanos_readable(self.spark)
-        reader = self.spark.read.format(spec.fmt)
-        if spec.options:
-            reader = reader.options(**spec.options)
-        return normalize_nanos(spec.name, reader.load(spec.path))
-
-    def register_dir(self, sf_dir: str, view: bool = True) -> None:
-        """Register every known test table found under ``sf_dir``."""
-        for name in TESTDATA_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
-                time_col = "ts" if name == "events" else None
-                self.register(
-                    TableSpec(name=name, path=path, time_column=time_col),
-                    view=view,
-                )
-
-
-#: columns stored as TIMESTAMP(NANOS) in the driver's parquet, which Spark
-#: reads as long (spark.sql.legacy.parquet.nanosAsLong) — normalized to
-#: µs-precision timestamps here, matching DuckDB's read of the same files.
-NANOS_TS_COLUMNS = {"events": ("ts",)}
-
-
-def _ensure_nanos_readable(spark: SparkSession) -> None:
-    """Make TIMESTAMP(NANOS) parquet columns readable on ANY session.
-
-    Spark has no nanosecond timestamp type; without this conf a read of the
-    driver's ``events.parquet`` dies with PARQUET_TYPE_ILLEGAL.  The conf is
-    runtime-settable, so set it here rather than relying on the caller's
-    session factory (the correctness driver builds a vanilla session).
-    """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # already set read-only / unsupported build — reads will tell
-
-
-def normalize_nanos(name: str, df: DataFrame) -> DataFrame:
-    for col in NANOS_TS_COLUMNS.get(name, ()):
-        if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
-            # integer division: epoch-ns ~1.7e18 exceeds double's exact range,
-            # float division would land ~12% of timestamps 1µs off the
-            # oracle's exact truncation
-            df = df.withColumn(
-                col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
-            )
-    return df
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 #: bucketed mirrors built by :func:`build_bucketed_mirror`:
@@ -166,8 +107,7 @@ def build_bucketed_mirror(
     key_dir = os.path.abspath(sf_dir)
     tag = hashlib.md5(key_dir.encode()).hexdigest()[:8]
     for name, key in specs:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
+        if not os.path.exists(table_path(sf_dir, name)):
             continue
         # bucket count is part of the identity: re-attaching files
         # written with a different count would declare a false
@@ -213,32 +153,70 @@ def build_bucketed_mirror(
             BUCKETED_MIRRORS.pop((key_dir, name), None)
 
 
+def _to_epoch_ns(t: str | _dt.datetime) -> int:
+    if isinstance(t, str):
+        t = _dt.datetime.fromisoformat(t)
+    if t.tzinfo is None:
+        t = t.replace(tzinfo=_dt.timezone.utc)
+    return int(t.timestamp() * 1_000_000) * 1000
+
+
 def load_table(
-    spark: SparkSession, sf_dir: str, name: str, plain: bool = False
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    plain: bool = False,
+    start_time: str | _dt.datetime | None = None,
+    end_time: str | _dt.datetime | None = None,
 ) -> DataFrame:
-    """``plain=True`` skips the bucketed mirror: a BROADCAST build side
+    """Table ``name`` under ``sf_dir``, its time column as µs timestamps.
+
+    ``plain=True`` skips the bucketed mirror: a BROADCAST build side
     gains nothing from bucket co-location and pays for it (32 small
     bucket files to open + schedule vs one parquet — measured ~0.1-0.2s
-    on the sf1 region_revenue broadcast of customer)."""
+    on the sf1 region_revenue broadcast of customer).
+
+    ``start_time`` / ``end_time`` bound the time column to
+    ``[start, end)``; tables without one ignore them.  The bound filters
+    the STORED column, before the nanos conversion, so it lands in the
+    parquet scan's ``PushedFilters`` for both storage types (a filter on
+    the converted column would not)."""
+    df = None
     tbl = (
         None if plain
         else BUCKETED_MIRRORS.get((os.path.abspath(sf_dir), name))
     )
     if tbl is not None:
         try:
-            return spark.table(tbl)
+            df = spark.table(tbl)
         except Exception:  # noqa: BLE001
             pass  # other session / dropped — fall back to parquet
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    _ensure_nanos_readable(spark)
-    return normalize_nanos(name, spark.read.parquet(path))
+    if df is None:
+        # Spark has no nanosecond timestamp type; without this conf a read
+        # of a TIMESTAMP(NANOS) column dies with PARQUET_TYPE_ILLEGAL.  It
+        # is runtime-settable, so set it here rather than relying on the
+        # caller's session factory (callers may pass a vanilla session).
+        try:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:  # noqa: BLE001
+            pass  # already set read-only / unsupported build — reads will tell
+        df = spark.read.parquet(table_path(sf_dir, name))
+    tcol = TIME_COLUMNS.get(name)
+    if tcol is None or tcol not in df.columns:
+        return df
+    ttype = df.schema[tcol].dataType  # long (nanos), timestamp or timestamp_ntz
+    nanos = isinstance(ttype, T.LongType)
 
+    def stored(t: str | _dt.datetime):
+        return F.lit(_to_epoch_ns(t)) if nanos else F.lit(str(t)).cast(ttype)
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all test tables from ``sf_dir`` as DataFrames (no views)."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load_table(spark, sf_dir, name)
-    return out
+    if start_time is not None:
+        df = df.filter(F.col(tcol) >= stored(start_time))
+    if end_time is not None:
+        df = df.filter(F.col(tcol) < stored(end_time))
+    if nanos:
+        # integer division: epoch-ns ~1.7e18 exceeds double's exact range,
+        # float division would land ~12% of timestamps 1µs off the
+        # oracle's exact truncation
+        df = df.withColumn(tcol, F.timestamp_micros(F.expr(f"`{tcol}` div 1000")))
+    return df

@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+#: Newton steps of :func:`logistic_regression_df` at most; on ≤ 4096 cells
+#: a step costs microseconds and the ``tol`` exit normally stops far sooner
+NEWTON_MAX_STEPS = 50
+
+
 def _gw(group_cols: list[str]):
     return Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
 
@@ -129,7 +134,6 @@ def logistic_regression_df(
     df: DataFrame,
     x_cols: list[str],
     label_col: str,
-    iters: int = 25,
     lr: float = 2.0,
     tol: float = 1e-4,
 ) -> tuple[list[float], float]:
@@ -152,11 +156,8 @@ def logistic_regression_df(
     holds only the bounded cell table, never data rows.  Features are
     standardized internally; returned weights are de-standardized.
     ``lr`` keeps its meaning as a step-norm bound and ``tol`` is the
-    gradient stopping threshold; the driver-side Newton loop runs
-    ``max(iters, 50)`` iterations at most — on ≤ 4096 cells extra
-    driver iterations are microseconds, so small ``iters`` values are
-    treated as a convergence hint, not a hard cap (tol-based early exit
-    normally stops the loop long before the bound).
+    gradient stopping threshold; the driver-side Newton loop runs at
+    most :data:`NEWTON_MAX_STEPS` steps.
 
     Returns ``(weights, bias)`` for p = sigmoid(w·x + b).
     """
@@ -233,7 +234,7 @@ def logistic_regression_df(
     # driver-side numpy on ≤ 4096 points, no further cluster passes
     coef = np.zeros(k + 1)
     step_cap = max(float(lr) * 5.0, 10.0)
-    for _ in range(max(int(iters), 50)):
+    for _ in range(NEWTON_MAX_STEPS):
         p = 1.0 / (1.0 + np.exp(-np.clip(z @ coef, -500.0, 500.0)))
         err = (wgt * p - pos) / ntot  # Σ (p - y) per cell
         grad = z.T @ err

@@ -17551,7 +17551,8 @@ def _wrap_in_subqueries(sql_text: str) -> str:
 
 def sql(spark, query: str):
     """Run reference-dialect SQL on a SparkSession (tables must be
-    registered as views, e.g. via Catalog.register_dir)."""
+    registered as views, e.g. ``catalog.load_table(...)`` passed to
+    ``createOrReplaceTempView``)."""
     _SLEPT_CTX.set(False)
     res = translate(query)
     if res.settings:

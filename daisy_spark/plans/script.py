@@ -1665,7 +1665,7 @@ class ScriptRunner:
                 ]
                 t9 = _Table(
                     name=name, cols=cols9,
-                    spec=TableSpec(name=name, path="", engine="MergeTree"),
+                    spec=TableSpec(name=name, engine="MergeTree"),
                     df=df9,
                 )
                 t9.engine_raw = engine_raw or "Memory"
@@ -1699,7 +1699,7 @@ class ScriptRunner:
             if k.strip('`"').replace("_", "a").isalnum()
         )
         spec = TableSpec(
-            name=name, path="", engine=(
+            name=name, engine=(
                 engine if engine in ("Memory", "Null", "MergeTree")
                 else engine + "MergeTree"
             ),
@@ -1718,7 +1718,7 @@ class ScriptRunner:
         # Memory/Null never merge -> MergeTree identity semantics on read
         if spec.engine in ("Memory", "Null"):
             spec = TableSpec(
-                name=name, path="", engine="MergeTree", order_by=ident_keys
+                name=name, engine="MergeTree", order_by=ident_keys
             )
         t = _Table(
             name=name, cols=cols, spec=spec, sort_keys=order_keys,
@@ -1737,7 +1737,7 @@ class ScriptRunner:
             t.next_block = 0
         if engine == "Null":
             # Null engine discards all inserts; only the schema exists
-            t.spec = TableSpec(name=name, path="", engine="Null")
+            t.spec = TableSpec(name=name, engine="Null")
             t.sort_keys = []
             if as_select is not None and not cols:
                 src = dialect_sql(self.spark, _emit(as_select))
@@ -2115,7 +2115,7 @@ class ScriptRunner:
                 )
                 for f in df.schema.fields
             ],
-            spec=TableSpec(name=name, path="", engine="MergeTree"),
+            spec=TableSpec(name=name, engine="MergeTree"),
             df=df,
         )
         try:
@@ -2231,7 +2231,7 @@ class ScriptRunner:
             t = _Table(
                 name=name,
                 cols=cols,
-                spec=TableSpec(name=name, path="", engine="MergeTree"),
+                spec=TableSpec(name=name, engine="MergeTree"),
                 df=None,
             )
             self.tables[name] = t

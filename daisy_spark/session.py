@@ -59,7 +59,7 @@ DEFAULT_CONF = {
     ),
     # test data carries TIMESTAMP(NANOS) parquet columns which Spark has no
     # native type for; read as long and convert at the catalog layer
-    # (catalog.load_tables / queries normalize to µs timestamps)
+    # (catalog.load_table normalizes them to µs timestamps)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",

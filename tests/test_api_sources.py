@@ -9,6 +9,7 @@ import pytest
 
 from daisy_spark import sources as SRC
 from daisy_spark.api import load_time_bounded, search
+from daisy_spark.catalog import load_table
 
 SF_DIR = os.environ.get("DAISY_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -36,6 +37,69 @@ def test_time_filter_reaches_parquet_scan(spark):
     # the bound must be applied to the raw int64 nanos column and appear
     # as a pushed parquet filter, not a post-scan timestamp comparison
     assert "PushedFilters: [" in plan and "GreaterThanOrEqual(ts" in plan, plan
+
+
+@pytest.fixture()
+def nanos_dir(tmp_path):
+    """An ``events.parquet`` whose ``ts`` is stored as TIMESTAMP(NANOS),
+    with sub-microsecond parts that must be truncated, not rounded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = 1_704_067_200 * 10**9  # 2024-01-01 00:00:00 UTC
+    ts = [base + i * 3_600 * 10**9 + i * 1_001_999 for i in range(120)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(120), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("ns")),
+        }),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    return str(tmp_path)
+
+
+def test_nanos_ts_truncates_like_duckdb(spark, nanos_dir):
+    import duckdb
+
+    got = sorted(
+        r[0] for r in load_table(spark, nanos_dir, "events")
+        .selectExpr("unix_micros(ts)").collect()
+    )
+    want = sorted(
+        r[0] for r in duckdb.connect().execute(
+            "SELECT epoch_us(CAST(ts AS TIMESTAMP)) FROM "
+            f"'{nanos_dir}/events.parquet'"
+        ).fetchall()
+    )
+    assert got == want
+
+
+def test_nanos_time_bound_pushed_on_raw_long(spark, nanos_dir):
+    df = load_table(
+        spark, nanos_dir, "events", plain=True,
+        start_time="2024-01-02 00:00:00",
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(ts,1704153600000000000)" in plan, plan
+
+
+def test_nanos_search_time_bounds(spark, nanos_dir):
+    import duckdb
+
+    out = search(
+        spark,
+        "SELECT count() AS cnt FROM events",
+        nanos_dir,
+        start_time="2024-01-02 00:00:00",
+        end_time="2024-01-04 00:00:00",
+    )
+    want = duckdb.connect().execute(
+        f"SELECT count(*) FROM '{nanos_dir}/events.parquet' "
+        "WHERE ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-04'"
+    ).fetchone()[0]
+    assert 0 < want < 120
+    assert out.collect()[0].cnt == want
 
 
 def test_search_pagination(spark):

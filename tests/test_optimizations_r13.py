@@ -208,14 +208,14 @@ def test_logistic_regression_null_features(spark):
 
     rows = [(float(i), 1.0 if i > 50 else 0.0) for i in range(100)]
     clean = spark.createDataFrame(rows, "x double, y double")
-    w0, b0 = logistic_regression_df(clean, ["x"], "y", iters=30)
+    w0, b0 = logistic_regression_df(clean, ["x"], "y")
 
     noisy = clean.unionByName(
         spark.createDataFrame(
             [(None, 1.0), (None, 0.0), (3.0, None)], "x double, y double"
         )
     )
-    w1, b1 = logistic_regression_df(noisy, ["x"], "y", iters=30)
+    w1, b1 = logistic_regression_df(noisy, ["x"], "y")
     assert w1 == pytest.approx(w0)
     assert b1 == pytest.approx(b0)
 
@@ -227,7 +227,7 @@ def test_logistic_regression_all_null_feature(spark):
         [(None, 1.0), (None, 0.0)], "x double, y double"
     )
     # degenerate but must not raise (zero usable rows -> zero model)
-    w, b = logistic_regression_df(df, ["x"], "y", iters=5)
+    w, b = logistic_regression_df(df, ["x"], "y")
     assert all(math.isfinite(v) for v in w + [b])
 
 
