@@ -20,6 +20,7 @@ dedup/merge key), version, sign, summed and aggregate columns.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import os
 from dataclasses import dataclass
 
@@ -102,8 +103,6 @@ def build_bucketed_mirror(
     At 100-TB scale this is exactly the layout a production deployment
     would write once at ingest: bucket count scales with cluster cores,
     and every orderkey join/aggregation downstream rides the layout."""
-    import hashlib
-
     key_dir = os.path.abspath(sf_dir)
     tag = hashlib.md5(key_dir.encode()).hexdigest()[:8]
     for name, key in specs:
@@ -161,6 +160,101 @@ def _to_epoch_ns(t: str | _dt.datetime) -> int:
     return int(t.timestamp() * 1_000_000) * 1000
 
 
+#: footer digest + inference confs -> the data schema (partition columns
+#: excluded) Spark infers from that footer.  Holds schemas only, never
+#: file listings or data; emptied when it reaches SCHEMA_CACHE_SIZE
+#: entries.  Process-wide: a value depends on its key alone, so callers
+#: and threads sharing it cannot change each other's results.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+SCHEMA_CACHE_SIZE = 1024
+
+#: session confs the footer -> Spark schema conversion reads.  They are
+#: part of the cache key: :func:`load_table` sets nanosAsLong before every
+#: read, and a session that differs in any of these gets its own entries.
+#: With ``spark.sql.parquet.mergeSchema`` on, inference reads every
+#: footer, so :func:`_read_parquet` does not use the cache at all.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists ``name`` (a file or directory
+    name; HadoopFSUtils.shouldFilterOutPathName)."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(("_common_metadata", "_metadata"))
+
+
+def _first_footer(path: str) -> tuple[str, bytes] | None:
+    """The file Spark's non-merging parquet inference reads its schema
+    from, with a digest of its footer bytes.
+
+    That file is the table path itself for a single-file table, else the
+    first listed data file by full path string (ParquetUtils.inferSchema
+    with mergeSchema off; it assumes every other file agrees).  None
+    when there is no such footer to key on: no data file on the local
+    filesystem, a summary file (inference would prefer it), or a file
+    too short or vanished."""
+    if os.path.isfile(path):
+        first = path
+    else:
+        files = []
+        for root, dirs, names in os.walk(path, followlinks=True):
+            dirs[:] = [d for d in dirs if _listed(d)]
+            files += [os.path.join(root, n) for n in names if _listed(n)]
+        if not files or any(os.path.basename(f).startswith("_") for f in files):
+            return None
+        first = min(files)
+    try:
+        with open(first, "rb") as f:
+            size = f.seek(0, os.SEEK_END)
+            if size < 12:
+                return None
+            f.seek(size - 8)
+            tail = f.read(8)
+            n = int.from_bytes(tail[:4], "little")
+            if tail[4:] != b"PAR1" or n > size - 12:
+                return None
+            f.seek(size - 8 - n)
+            return first, hashlib.blake2b(f.read(n), digest_size=16).digest()
+    except OSError:
+        return None  # rewritten under us: the plain read reports it
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job when
+    the footer it would infer from has been seen before.
+
+    The inferred schema is a function of the footer's bytes and the
+    session's inference confs only, so the key is content-based: a
+    rewrite in place (same path, new footer) misses, however coarse the
+    filesystem's mtime.  The hit passes only the data schema, so Spark
+    still lists the files and infers partition columns and their types
+    on every read, exactly as the plain read does."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return spark.read.parquet(path)
+    found = _first_footer(path)
+    if found is None:
+        return spark.read.parquet(path)
+    first, digest = found
+    key = (digest, *(spark.conf.get(c) for c in _INFER_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        # one file: Spark infers from exactly this footer, no partitions
+        schema = spark.read.parquet(first).schema
+        if len(_SCHEMAS) >= SCHEMA_CACHE_SIZE:
+            _SCHEMAS.clear()
+        _SCHEMAS[key] = schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -200,7 +294,7 @@ def load_table(
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:  # noqa: BLE001
             pass  # already set read-only / unsupported build — reads will tell
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
     tcol = TIME_COLUMNS.get(name)
     if tcol is None or tcol not in df.columns:
         return df

@@ -19,7 +19,8 @@ Spark-first mapping:
                       of the reference's in-memory key index, with the
                       watermark as its ``max_idempotent_ids`` retention
                       analog) -> foreachBatch partitioned append with
-                      checkpointing (restart-safe offsets).
+                      checkpointed offsets (at-least-once across a crash
+                      between a batch's write and its commit).
 
 Partition columns follow the reference granularities: M/D/H/m.
 """
@@ -208,14 +209,24 @@ def ingest_stream(
     ``withWatermark(_time) + dropDuplicates(_idem)`` keeps the key index
     bounded (state older than the watermark ages out — the Spark analog of
     the reference's max_idempotent_ids ring); ``foreachBatch`` appends
-    partitioned parquet; the checkpoint makes source offsets + dedup state
-    restart-safe.  Returns the StreamingQuery.
+    partitioned parquet, one file per ``_part`` per micro-batch; the
+    checkpoint keeps source offsets + dedup state across restarts.
+
+    The append is at-least-once, not exactly-once: a crash after a
+    batch's write and before its offset commit replays the batch on
+    restart, and the replay appends its rows again (it dedups against
+    the state from before that batch).  Returns the StreamingQuery.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+        # one write job, one file per _part the batch touches (the
+        # reference's one part per commit); an empty batch writes none
+        (
+            batch_df.repartition(PARTITION_COL)
+            .write.mode("append")
+            .partitionBy(PARTITION_COL)
+            .parquet(path)
+        )
 
     staged = with_ingest_columns(stream_df, time_col, idem_col, granularity)
     staged = staged.withWatermark(TIME_COL, watermark).dropDuplicates([IDEM_COL])

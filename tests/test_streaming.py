@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from daisy_spark import api
 from daisy_spark import streaming as ST
 
 
@@ -83,6 +84,40 @@ def test_stream_ingest_dedup_and_restart(spark, tmp_path):
 
     got2 = sorted(r["_idem"] for r in ST.read_table(spark, sink).collect())
     assert got2 == ["a", "b", "c"]
+
+
+def _data_files(sink):
+    """``_part`` directory -> its data files, as Spark lists them."""
+    return {
+        d: [f for f in os.listdir(os.path.join(sink, d)) if not f.startswith((".", "_"))]
+        for d in os.listdir(sink)
+        if d.startswith(f"{ST.PARTITION_COL}=")
+    }
+
+
+def test_stream_one_file_per_part_per_batch(spark, tmp_path):
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    src = tmp_path / "src"
+    src.mkdir()
+    root = str(tmp_path / "wh")
+    sink = os.path.join(root, "events.parquet")
+    with open(src / "f1.json", "w") as f:
+        for i in range(60):
+            t = f"2024-01-0{1 + i % 2} {i % 24:02d}:00:00"
+            f.write(json.dumps({"_idem": f"k{i}", "v": i, "_time": t}) + "\n")
+
+    stream = ST.json_lines_source(spark, str(src), "_idem STRING, v LONG, _time TIMESTAMP")
+    q = ST.ingest_stream(stream, sink, str(tmp_path / "ckpt"), trigger_once=True)
+    q.awaitTermination(120)
+    rows = [p.numInputRows for p in q.recentProgress]
+
+    # one data batch over two days, then the watermark's no-data batch
+    assert rows == [60, 0]
+    files = _data_files(sink)
+    assert sorted(files) == ["_part=20240101", "_part=20240102"]
+    assert all(len(fs) == 1 for fs in files.values()), files
+    out = api.search(spark, "SELECT count() AS n FROM events", root)
+    assert out.collect()[0].n == 60
 
 
 def test_live_view_refreshes(spark, tmp_path):
