@@ -1,17 +1,30 @@
-"""Function library: reference function names -> Spark Column expressions.
+"""Function implementations the SQL dialect and the registry queries use.
 
-Split by family:
+ClickHouse function names resolve in one place, the dialect's
+name -> template tables (``plans/dialect.py`` ``FUNC_MAP`` and
+``PARAMETRIC_MAP``).  This package holds what those templates and the
+``queries*.py`` registry call into:
 
-- ``scalar``     arithmetic/comparison/conditional/conversion/date-time/
-                  string/array/JSON/hash/math/... (SURVEY §2.8)
-- ``aggregates`` aggregate functions incl. combinators (SURVEY §2.4)
-- ``timeseries`` windowFunnel, retention, sequenceMatch, rate, deltaSum,
-                  histogram (SURVEY §2.4 time-series family)
-
-Every public callable takes/returns :class:`pyspark.sql.Column` so the
-whole library stays JVM-side (whole-stage codegen); no row-at-a-time
-Python UDFs.
+- ``ch*``        reference-exact Python UDFs the templates lower to
+                  (``ch_*`` routines, registered by :func:`register_udfs`)
+- ``scalar``, ``aggregates``, ``timeseries``
+                  Column builders the registry queries compose
+                  (toStartOfHour, welchTTest, deltaSum, histogram, ...)
+- ``stats``      DataFrame-level statistical tests (the scale path)
+- ``states``     -State / -Merge partial aggregation states
+- ``nphash``     vectorised hashes for the dedup operators
 """
 
-from daisy_spark.functions import scalar, aggregates, timeseries  # noqa: F401
-from daisy_spark.functions.scalar import FUNCTIONS  # noqa: F401
+
+def register_udfs(spark) -> None:
+    """Register every ``ch_*`` Python UDF the dialect lowers to, once per
+    SparkSession."""
+    if getattr(spark, "_daisy_ch_udfs", False):
+        return
+    from daisy_spark.functions import (
+        chcoding, chgeo, chh3, chhash, chpoly, chstats, chtext, chweek,
+    )
+
+    for mod in (chtext, chstats, chcoding, chhash, chgeo, chh3, chweek, chpoly):
+        mod.register_udfs(spark)
+    spark._daisy_ch_udfs = True

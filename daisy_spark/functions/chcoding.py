@@ -111,8 +111,6 @@ def java_hash_utf16le_from_utf8(s: str | None) -> int | None:
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chcoding_udfs", False):
-        return
     from daisy_spark.functions.chhash import _to_i64
 
     # long (two's-complement) so Spark's hex() prints the same 16
@@ -148,7 +146,6 @@ def register_udfs(spark) -> None:
     spark.udf.register("ch_url_hierarchy", url_hierarchy, "array<string>")
     spark.udf.register("ch_cut_fss_custom", cut_to_fss_custom, "string")
     spark.udf.register("ch_fss_custom", fss_custom, "string")
-    spark._daisy_chcoding_udfs = True
 
 
 def _url_level_length(level: int, s: bytes) -> int:

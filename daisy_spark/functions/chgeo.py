@@ -155,9 +155,6 @@ def distance(
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chgeo_udfs", False):
-        return
-
     def _mk(method):
         return lambda a, b, c, d: (
             None if None in (a, b, c, d)
@@ -184,7 +181,6 @@ def register_udfs(spark) -> None:
         "ch_geohash_decode", _geohash_decode_py,
         "struct<col1:double,col2:double>",
     )
-    spark._daisy_chgeo_udfs = True
 
 _GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 

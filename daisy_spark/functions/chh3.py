@@ -203,8 +203,6 @@ def edge_angle(res: int | None) -> float | None:
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chh3_udfs", False):
-        return
     spark.udf.register("ch_h3_get_resolution", get_resolution, "int")
     spark.udf.register("ch_h3_get_base_cell", get_base_cell, "int")
     spark.udf.register("ch_h3_is_valid", is_valid, "tinyint")
@@ -215,4 +213,3 @@ def register_udfs(spark) -> None:
     spark.udf.register("ch_h3_edge_length_m", edge_length_m, "double")
     spark.udf.register("ch_h3_hex_area_m2", hex_area_m2, "double")
     spark.udf.register("ch_h3_edge_angle", edge_angle, "double")
-    spark._daisy_chh3_udfs = True

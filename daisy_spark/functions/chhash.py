@@ -571,8 +571,6 @@ def register_udfs(spark) -> None:
     """Register string-input hash UDFs for dynamic (non-literal) args.
     Python row-at-a-time UDFs — corpus/test surface only; distributed
     hot paths use xxhash64 JVM-side."""
-    if getattr(spark, "_daisy_chhash_udfs", False):
-        return
 
     def _s(f):
         return lambda s: (
@@ -623,4 +621,3 @@ def register_udfs(spark) -> None:
     )
     spark.udf.register("ch_hex_float", _hex_float, "string")
     spark.udf.register("ch_hex_le_str", _hex_le_str, "string")
-    spark._daisy_chhash_udfs = True

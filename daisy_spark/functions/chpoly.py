@@ -413,8 +413,6 @@ def convex_hull_cartesian(s: str | None):
 # -- registration -----------------------------------------------------------
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chpoly_udfs", False):
-        return
     _PT = "struct<col1:double,col2:double>"
     _POLY = f"array<array<{_PT}>>"
     _MULTI = f"array<{_POLY}>"
@@ -443,4 +441,3 @@ def register_udfs(spark) -> None:
     spark.udf.register(
         "ch_polygon_convex_hull_cartesian", convex_hull_cartesian, _POLY
     )
-    spark._daisy_chpoly_udfs = True

@@ -242,8 +242,6 @@ def rank_corr(xs, ys):
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chstats_udfs", False):
-        return
     spark.udf.register(
         "ch_welch_ttest", welch_ttest,
         "struct<col1:double,col2:double>",
@@ -258,4 +256,3 @@ def register_udfs(spark) -> None:
         "struct<col1:double,col2:double>",
     )
     spark.udf.register("ch_rank_corr", rank_corr, "double")
-    spark._daisy_chstats_udfs = True

@@ -354,8 +354,6 @@ def decode_xml_component(s) -> str | None:
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chtext_udfs", False):
-        return
     spark.udf.register("ch_decode_xml", decode_xml_component, "string")
     spark.udf.register(
         "ch_fmt_timedelta",
@@ -400,7 +398,6 @@ def register_udfs(spark) -> None:
         "ch_uuid_string_to_num", uuid_string_to_num, "binary"
     )
     spark.udf.register("ch_enum_ranked", ch_enum_ranked_json, "string")
-    spark._daisy_chtext_udfs = True
 
 
 # ---------------------------------------------------------------------------

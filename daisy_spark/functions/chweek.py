@@ -84,8 +84,6 @@ def _parse(s):
 
 
 def register_udfs(spark) -> None:
-    if getattr(spark, "_daisy_chweek_udfs", False):
-        return
     spark.udf.register(
         "ch_to_week",
         lambda s, m: (
@@ -104,4 +102,3 @@ def register_udfs(spark) -> None:
         ),
         "long",
     )
-    spark._daisy_chweek_udfs = True

@@ -1,23 +1,14 @@
-"""Time-series aggregate library (SURVEY §2.4 "time-series/funnel" family).
+"""Time-series builders the registry queries compose (SURVEY §2.4).
 
-These are the reference's signature analytics aggregates:
+- deltaSum(x)          src/AggregateFunctions/AggregateFunctionDeltaSum.h
+- rate / histogram     .../AggregateFunctionRate.h, ...Histogram.h
+- segmentLengthSum     total covered length of [start, end] segments
 
-- windowFunnel(window)(ts, c1, c2, ...)   src/AggregateFunctions/AggregateFunctionWindowFunnel.h
-- retention(c1, c2, ...)                  .../AggregateFunctionRetention.h
-- sequenceMatch('pattern')(ts, c1, ...)   .../AggregateFunctionSequenceMatch.h
-- deltaSum(x)                             .../AggregateFunctionDeltaSum.h
-- rate / histogram                        .../AggregateFunctionRate.h, ...Histogram.h
-
-Spark has no equivalents, so each is built as a composition:
-``collect_list(struct(ts, conds...))`` -> ``array_sort`` (by ts) -> a
-higher-order ``aggregate``/``filter`` expression that walks the sorted
-events.  Everything stays in JVM expression land (no Python UDFs): per
-group the state is a small struct, and the walk is O(events-in-group).
-
-Scale note (100 TB): collect_list per group is bounded by per-user event
-counts, not table size — funnel/retention group keys are user ids, so
-groups are small and the collect is the same memory shape the reference's
-AggregateFunctionWindowFunnel keeps per hash-table slot.
+The funnel family (windowFunnel, retention, sequenceMatch,
+sequenceCount) has one implementation, the SQL dialect's templates
+(``plans/dialect.py``); registry queries reach it through ``plans.sql``.
+The ``*_df`` forms here are DataFrame transforms: one shuffle on the
+group key, no per-group event buffer.
 """
 
 from __future__ import annotations
@@ -28,111 +19,6 @@ from pyspark.sql import functions as F
 
 def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x)
-
-
-def _sorted_events(ts: Column, conds: list[Column]) -> Column:
-    """array<struct<t:long, c1..cN:boolean>> sorted by time (µs epoch)."""
-    ev = F.struct(
-        F.unix_micros(_c(ts).cast("timestamp")).alias("t"),
-        *[c.cast("boolean").alias(f"c{i+1}") for i, c in enumerate(conds)],
-    )
-    return F.array_sort(F.collect_list(ev))
-
-
-def window_funnel(window_seconds: int, ts: Column, *conds: Column) -> Column:
-    """Longest consecutive chain c1 -> c2 -> ... within `window_seconds`.
-
-    Semantics per AggregateFunctionWindowFunnel.h: events sorted by time;
-    level k is reached if ck fires after c(k-1) and within window of the
-    chain's c1 time.  Returns Int in [0, len(conds)].
-    """
-    n = len(conds)
-    events = _sorted_events(ts, list(conds))
-    win = F.lit(int(window_seconds) * 1_000_000).cast("long")
-    # state: starts[k] = chain-start time of a chain that reached level k+1
-    # (null = not reached). Mirrors the reference's events_timestamp vector
-    # (AggregateFunctionWindowFunnel.h getEventLevel): a c1 event always
-    # overwrites starts[0] with its own (later) time — a later start only
-    # loosens the window constraint; a ck event propagates starts[k-1]
-    # forward when within window of that chain's start.
-    init = F.array_repeat(F.lit(None).cast("long"), n)
-
-    def step(starts, e):
-        out = []
-        for lvl in range(n):
-            ci = e[f"c{lvl+1}"]
-            if lvl == 0:
-                out.append(F.when(ci, e["t"]).otherwise(starts[0]))
-            else:
-                prev_start = starts[lvl - 1]
-                ok = ci & prev_start.isNotNull() & ((e["t"] - prev_start) <= win)
-                out.append(F.when(ok, prev_start).otherwise(starts[lvl]))
-        return F.array(*out)
-
-    final = F.aggregate(events, init, step)
-    # max level = highest index with non-null chain-start time
-    idx = F.sequence(F.lit(1), F.lit(n))
-    lv = F.zip_with(final, idx, lambda s, i: F.when(s.isNotNull(), i).otherwise(F.lit(0)))
-    return F.array_max(F.concat(F.array(F.lit(0)), lv)).alias("window_funnel")
-
-
-def retention(*conds: Column) -> Column:
-    """retention(c1, c2, ..): array<int>.
-
-    AggregateFunctionRetention.h ORs each condition across the group's rows
-    into a bitmask, then r[0] = saw(c1); r[i] = saw(c1) AND saw(ci) — the
-    conditions need NOT hold on the same row.
-    """
-    saw_first = F.max(F.when(_c(conds[0]), 1).otherwise(0))
-    out = [saw_first]
-    for c in conds[1:]:
-        out.append(F.max(F.when(_c(c), 1).otherwise(0)) * saw_first)
-    return F.array(*out)
-
-
-def sequence_match(pattern_conds: list[int], ts: Column, *conds: Column) -> Column:
-    """sequenceMatch('(?1)(?2)...')(ts, c1, c2, ...) — simplified pattern
-    support: a sequence of condition indices (the reference's `(?N)` refs,
-    without `.*`/time constraints which its parser also supports).
-
-    True iff events matching cond[i0], cond[i1], ... occur in time order.
-    Fold over time-sorted events advancing a pointer — O(n) like the
-    reference's DFA walk (AggregateFunctionSequenceMatch.h).
-    """
-    events = _sorted_events(ts, list(conds))
-    k = len(pattern_conds)
-
-    # state = how many pattern steps matched so far
-    def step(acc, e):
-        expr = acc
-        for step_i in range(k):
-            want = pattern_conds[step_i]  # 1-based condition index
-            expr = F.when((acc == step_i) & e[f"c{want}"], F.lit(step_i + 1)).otherwise(expr)
-        return expr
-
-    matched = F.aggregate(events, F.lit(0), step)
-    return (matched >= k).alias("sequence_match")
-
-
-def sequence_count(pattern_conds: list[int], ts: Column, *conds: Column) -> Column:
-    """Count of non-overlapping pattern matches (restart after full match)."""
-    events = _sorted_events(ts, list(conds))
-    k = len(pattern_conds)
-
-    def step(acc, e):
-        pos, cnt = acc["pos"], acc["cnt"]
-        expr_pos = pos
-        for step_i in range(k):
-            want = pattern_conds[step_i]
-            expr_pos = F.when((pos == step_i) & e[f"c{want}"], F.lit(step_i + 1)).otherwise(expr_pos)
-        done = expr_pos == k
-        return F.struct(
-            F.when(done, F.lit(0)).otherwise(expr_pos).alias("pos"),
-            F.when(done, cnt + 1).otherwise(cnt).alias("cnt"),
-        )
-
-    init = F.struct(F.lit(0).alias("pos"), F.lit(0).alias("cnt"))
-    return F.aggregate(events, init, step).getField("cnt").alias("sequence_count")
 
 
 def delta_sum_df(df, ts, x, group_cols: list[str], out_col: str = "delta_sum"):
@@ -159,27 +45,6 @@ def delta_sum_df(df, ts, x, group_cols: list[str], out_col: str = "delta_sum"):
             ).alias(out_col)
         )
     )
-
-
-def delta_sum(ts: Column, x: Column) -> Column:
-    """Sum of positive deltas of x in time order (AggregateFunctionDeltaSum.h
-    sums positive differences between consecutive values).
-
-    Aggregate-column form (collect_list fold) — fine for bounded groups;
-    for skew-prone keys prefer :func:`delta_sum_df`, whose window sort
-    spills instead of buffering the group in memory."""
-    vals = F.array_sort(
-        F.collect_list(F.struct(_c(ts).alias("t"), _c(x).cast("double").alias("v")))
-    )
-    def step(acc, e):
-        d = e["v"] - acc["prev"]
-        return F.struct(
-            F.when(acc["has"] & (d > 0), acc["s"] + d).otherwise(acc["s"]).alias("s"),
-            e["v"].alias("prev"),
-            F.lit(True).alias("has"),
-        )
-    init = F.struct(F.lit(0.0).alias("s"), F.lit(0.0).alias("prev"), F.lit(False).alias("has"))
-    return F.aggregate(vals, init, step).getField("s").alias("delta_sum")
 
 
 def rate(ts: Column, x: Column) -> Column:
@@ -238,62 +103,13 @@ def histogram_df(df, x, nbins: int, group_cols: list[str] | None = None):
     )
 
 
-def histogram(nbins: int, x: Column) -> Column:
-    """Adaptive histogram approximated by equal-width bins over [min,max]:
-    array<struct<lower,upper,height>> (reference uses adaptive centroids —
-    AggregateFunctionHistogram.h; equal-width is the deterministic,
-    oracle-checkable variant).
-
-    Aggregate-column form collects the group's values — bounded groups
-    only; for global/huge-group histograms use :func:`histogram_df`."""
-    xs = F.collect_list(_c(x).cast("double"))
-    mn, mx = F.array_min(xs), F.array_max(xs)
-    width = (mx - mn) / nbins
-    bins = F.sequence(F.lit(0), F.lit(nbins - 1))
-    return F.transform(
-        bins,
-        lambda i: F.struct(
-            (mn + i * width).alias("lower"),
-            (mn + (i + 1) * width).alias("upper"),
-            F.size(
-                F.filter(
-                    xs,
-                    lambda v: (v >= mn + i * width)
-                    & F.when(i == nbins - 1, v <= mx).otherwise(v < mn + (i + 1) * width),
-                )
-            ).cast("double").alias("height"),
-        ),
-    )
-
-
-def segment_length_sum(ts_start: Column, ts_end: Column) -> Column:
-    """Total length of the union of [start,end) segments
-    (AggregateFunctionSegmentLengthSum.h): sort by start, merge overlaps."""
-    segs = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.unix_micros(_c(ts_start).cast("timestamp")).alias("s"),
-                F.unix_micros(_c(ts_end).cast("timestamp")).alias("e"),
-            )
-        )
-    )
-    def step(acc, seg):
-        new_end = F.greatest(acc["end"], seg["e"])
-        add = F.when(
-            seg["s"] > acc["end"], seg["e"] - seg["s"]
-        ).otherwise(F.greatest(seg["e"] - acc["end"], F.lit(0).cast("long")))
-        return F.struct((acc["total"] + add).alias("total"), new_end.alias("end"))
-    init = F.struct(F.lit(0).cast("long").alias("total"), F.lit(-(1 << 62)).cast("long").alias("end"))
-    return (F.aggregate(segs, init, step).getField("total") / 1_000_000.0).alias("segment_length_sum")
-
-
 def segment_length_sum_df(df, ts_start, ts_end, group_cols, out_col="active_sec"):
     """df-level segmentLengthSum — the scale path: a running
     ``max(end) OVER (... ROWS UNBOUNDED PRECEDING AND 1 PRECEDING)``
     clamps each segment to its uncovered part, then a plain sum per
     group.  One shuffle on the group key, spills instead of buffering —
     no per-group array, so a heavy-hitter key can't OOM (unlike the
-    expression form above, which is for bounded groups / dialect use).
+    dialect's segmentLengthSum, which collects each group).
     """
     from pyspark.sql import Window
 
@@ -311,3 +127,4 @@ def segment_length_sum_df(df, ts_start, ts_end, group_cols, out_col="active_sec"
         .groupBy(*group_cols)
         .agg((F.sum("__seg_contrib") / 1_000_000.0).alias(out_col))
     )
+

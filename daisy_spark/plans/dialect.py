@@ -766,7 +766,13 @@ def _extract_expr(a: list[str]) -> str:
             # Spark's SECOND is DECIMAL(8,6); the reference's is integral
             return f"CAST({e} AS INT)" if unit == "SECOND" else e
         _raise_dialect("extract: single-argument form must be UNIT FROM expr")
-    return f"regexp_extract({a[0]}, {a[1]}, 1)"
+    return f"regexp_extract({a[0]}, {a[1]}, {_regex_group(a[1])})"
+
+
+def _regex_group(pattern: str) -> int:
+    """extract/extractAll return the first subpattern's match, or the
+    whole match when a constant pattern has no subpattern."""
+    return 0 if pattern.startswith("'") and "(" not in pattern else 1
 
 
 #: ENGINE = Join table layouts: name -> {"keys": [k1...],
@@ -5217,6 +5223,124 @@ def _mjd_from_expr(a: list[str], or_null: bool) -> str:
     )
 
 
+#: URL host (getURLHost — requires a dotted host; src/Functions/URL/domain.h)
+_URL_HOST_SQL = (
+    "regexp_extract(regexp_replace({0}, "
+    "'^([A-Za-z][A-Za-z0-9+.-]*:)?//', ''), "
+    "'^(?:[^/?#@]*@)?([A-Za-z0-9-]+(?:[.][A-Za-z0-9-]+)+)', 1)"
+)
+
+
+#: least-squares fit of {1} on {0} as the reference's (k, b) tuple
+_LINREG_SQL = (
+    "named_struct('col1', regr_slope({1}, {0}), "
+    "'col2', regr_intercept({1}, {0}))"
+)
+
+
+def _rate_expr(a: list[str]) -> str:
+    """rate(ts, x): value change per second between the group's first
+    and last timestamps; NULL when they coincide."""
+    t = f"CAST(CAST({a[0]} AS TIMESTAMP) AS DOUBLE)"
+    tv = f"named_struct('t', {t}, 'v', CAST({a[1]} AS DOUBLE))"
+    return (
+        f"IF(max({t}) > min({t}), "
+        f"(max({tv}).v - min({tv}).v) / (max({t}) - min({t})), NULL)"
+    )
+
+
+def _format_expr(a: list[str]) -> str:
+    """format('{} and {}', x, y): the constant pattern's ``{}`` slots
+    filled by the arguments in order (src/Functions/formatString.h)."""
+    pat = a[0].strip()
+    if len(pat) < 2 or pat[0] != "'" or pat[-1] != "'":
+        _raise_dialect("format: the pattern must be a constant string")
+    pieces = pat[1:-1].split("{}")
+    if len(pieces) != len(a):
+        _raise_dialect("format: argument count does not match the pattern")
+    out = [f"'{pieces[0]}'"]
+    for arg, piece in zip(a[1:], pieces[1:]):
+        out += [f"CAST({arg} AS STRING)", f"'{piece}'"]
+    return f"concat({', '.join(out)})"
+
+
+def _ngram_set_sql(s: str) -> str:
+    """Distinct 4-grams of a string (ngramDistance/ngramSearch operand)."""
+    s = f"CAST({s} AS STRING)"
+    return (
+        f"array_distinct(transform(sequence(1, greatest(length({s}) - 3, 0)), "
+        f"__ng -> substring({s}, __ng, 4)))"
+    )
+
+
+def _ngram_distance_expr(a: list[str]) -> str:
+    """ngramDistance(a, b) in [0, 1]: 1 - 2|A∩B| / (|A| + |B|) over the
+    distinct 4-gram sets (a set form of the reference's multiset
+    distance, src/Functions/FunctionsStringSimilarity.cpp: same
+    0 = identical / 1 = disjoint contract)."""
+    ga, gb = _ngram_set_sql(a[0]), _ngram_set_sql(a[1])
+    total = f"(size({ga}) + size({gb}))"
+    return (
+        f"IF({total} = 0, CAST(0 AS DOUBLE), 1 - 2 * "
+        f"CAST(size(array_intersect({ga}, {gb})) AS DOUBLE) / {total})"
+    )
+
+
+def _ngram_search_expr(a: list[str]) -> str:
+    """ngramSearch(haystack, needle): share of the needle's 4-grams
+    present in the haystack."""
+    ga, gb = _ngram_set_sql(a[0]), _ngram_set_sql(a[1])
+    return (
+        f"IF(size({gb}) = 0, CAST(1 AS DOUBLE), "
+        f"CAST(size(array_intersect({ga}, {gb})) AS DOUBLE) / size({gb}))"
+    )
+
+
+def _array_fn_arg(a: list[str]) -> str:
+    """The array operand of arrayMin/arrayMax/arrayAvg, mapped through
+    the optional leading lambda."""
+    return a[0] if len(a) == 1 else f"transform({a[1]}, {a[0]})"
+
+
+def _group_array_moving_expr(p: list[str], a: list[str], avg: bool) -> str:
+    """groupArrayMovingSum/Avg([window])(x) (AggregateFunctionMoving.h):
+    element i folds the last ``window`` values up to i in arrival order
+    (the whole prefix without a window).  The average divides by the
+    window size even for the leading partial windows, and by the group
+    size without a window."""
+    vals = f"transform(collect_list({a[0]}), __mv -> CAST(__mv AS DOUBLE))"
+    span = (
+        f"slice({vals}, greatest(1, __mi + 2 - {p[0]}), least(__mi + 1, {p[0]}))"
+        if p else f"slice({vals}, 1, __mi + 1)"
+    )
+    sums = (
+        f"transform({vals}, (__mx, __mi) -> aggregate({span}, "
+        f"CAST(0 AS DOUBLE), (__ma, __mb) -> __ma + __mb))"
+    )
+    if not avg:
+        return sums
+    div = f"CAST({p[0]} AS DOUBLE)" if p else f"size({vals})"
+    return f"transform({sums}, __ms -> __ms / {div})"
+
+
+def _group_array_insert_at_expr(p: list[str], a: list[str]) -> str:
+    """groupArrayInsertAt([default[, length]])(x, pos): x placed at index
+    pos, gaps/padding filled with default; an explicit length fixes the
+    result size (AggregateFunctionGroupArrayInsertAt.h)."""
+    pairs = (
+        f"array_sort(collect_list(struct(CAST({a[1]} AS INT) AS p, "
+        f"{a[0]} AS v)))"
+    )
+    width = p[1] if len(p) > 1 else f"element_at({pairs}, -1).p + 1"
+    dflt = p[0] if p else "NULL"
+    return (
+        f"transform(IF(({width}) < 1, array(), "
+        f"sequence(0, ({width}) - 1)), __gi -> coalesce("
+        f"element_at(filter({pairs}, __gs -> __gs.p = __gi), 1).v, "
+        f"{dflt}))"
+    )
+
+
 FUNC_MAP: dict[str, object] = {
     # arithmetic / comparison / logic
     "plus": "({0} + {1})", "minus": "({0} - {1})", "multiply": "({0} * {1})",
@@ -5404,6 +5528,9 @@ FUNC_MAP: dict[str, object] = {
         "regexp_extract({0}, "
         "'^(?:[a-zA-Z][a-zA-Z0-9+.-]*:)?//[^/?#]*([^#]*)', 1)"
     ),
+    "protocol": "regexp_extract({0}, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1)",
+    "queryString": "regexp_extract({0}, '^[^?#]*[?]([^#]*)', 1)",
+    "cutQueryString": "regexp_replace({0}, '^([^?#]*)[?][^#]*', '$1')",
     "toISOWeek": "extract(WEEK FROM {0})",
     "toISOYear": "extract(YEAROFWEEK FROM {0})",
     "substringUTF8": lambda a: _substring_expr(a, utf8=True),
@@ -5743,6 +5870,15 @@ FUNC_MAP: dict[str, object] = {
     "match": "({0} RLIKE {1})", "like": "({0} LIKE {1})",
     "notLike": "({0} NOT LIKE {1})", "ilike": "(lower({0}) LIKE lower({1}))",
     "replaceAll": "replace({0}, {1}, {2})",
+    # replaceOne: first occurrence only; an empty needle changes nothing
+    "replaceOne": (
+        "(CASE WHEN {1} = '' OR instr({0}, {1}) = 0 THEN {0} "
+        "ELSE concat(substring({0}, 1, instr({0}, {1}) - 1), {2}, "
+        "substring({0}, instr({0}, {1}) + length({1}), length({0}))) END)"
+    ),
+    "format": _format_expr,
+    "ngramDistance": _ngram_distance_expr,
+    "ngramSearch": _ngram_search_expr,
     # the reference's replacement backrefs are \1..\9 (re2); Spark's are
     # $1..$9 (java.util.regex) — convert inside literal replacements
     "replaceRegexpAll": lambda a: (
@@ -5757,7 +5893,9 @@ FUNC_MAP: dict[str, object] = {
     # extract is two functions: ANSI extract(UNIT FROM ts) (kept native —
     # Spark supports it) and the reference's regexp extract(s, pattern)
     "extract": _extract_expr,
-    "extractAll": "regexp_extract_all({0}, {1}, 1)",
+    "extractAll": lambda a: (
+        f"regexp_extract_all({a[0]}, {a[1]}, {_regex_group(a[1])})"
+    ),
     "splitByChar": "split({1}, {0})",
     # splitByString('', '') -> [] and (sep, '') -> [''] per
     # src/Functions/splitByString (FunctionsStringArray.h)
@@ -5790,6 +5928,8 @@ FUNC_MAP: dict[str, object] = {
         "ELSE get_json_object({0}, concat('$.', {1})) END)"
     ),
     "JSONHas": "(get_json_object({0}, concat('$.', {1})) IS NOT NULL)",
+    "JSONExtractKeys": "map_keys(from_json({0}, 'map<string,string>'))",
+    "toJSONString": "to_json({0})",
     # visitParam* scan FRAGMENTS ("a":123 without braces); regex forms
     # coalesce with the strict JSON path for full documents
     "visitParamExtractString": (
@@ -5915,6 +6055,17 @@ FUNC_MAP: dict[str, object] = {
         "array()" if a[0].replace(" ", "") == "array()" else f"flatten({a[0]})"
     ),
     "arrayUniq": "size(array_distinct({0}))",
+    "arrayMin": lambda a: f"array_min({_array_fn_arg(a)})",
+    "arrayMax": lambda a: f"array_max({_array_fn_arg(a)})",
+    "arrayAvg": lambda a: (
+        f"(aggregate({_array_fn_arg(a)}, CAST(0 AS DOUBLE), "
+        f"(acc, x) -> acc + CAST(x AS DOUBLE)) "
+        f"/ greatest(size({_array_fn_arg(a)}), 1))"
+    ),
+    "arrayUnion": lambda a: functools.reduce(
+        lambda x, y: f"array_union({x}, {y})", a
+    ),
+    "arrayExcept": "array_except({0}, {1})",
     # variadic; a single argument dedups (arrayIntersect.cpp — 00932)
     "arrayIntersect": lambda a: (
         f"array_distinct({a[0]})" if len(a) == 1
@@ -5935,6 +6086,7 @@ FUNC_MAP: dict[str, object] = {
     "emptyArrayDateTime": lambda a: "CAST(array() AS ARRAY<TIMESTAMP>)",
     # maps / tuples
     "mapKeys": "map_keys({0})", "mapValues": "map_values({0})",
+    "mapContains": "map_contains_key({0}, {1})",
     # tuple fields must be col1..colN (ColumnTuple names) regardless of
     # the argument expressions, so named_struct, not struct
     "tuple": lambda a: "named_struct("
@@ -5946,7 +6098,7 @@ FUNC_MAP: dict[str, object] = {
         if a[1].startswith("'")
         else f"{a[0]}.col{a[1]}"
     ),
-    # hashing (values differ from reference — see functions.scalar)
+    # hashing (values differ from reference: xxhash64 stands in)
     "cityHash64": "xxhash64({*})", "sipHash64": "xxhash64({*})",
     "xxHash64": "xxhash64({*})", "halfMD5": "xxhash64({*})",
     "MD5": "md5({0})", "SHA256": "sha2({0}, 256)", "SHA1": "sha1({0})",
@@ -5982,8 +6134,7 @@ FUNC_MAP: dict[str, object] = {
     # land in approx_count_distinct's rsd parameter
     # the reference's uniq/uniqCombined are EXACT below their adaptive
     # sampling threshold (~tens of thousands) — every stateless test
-    # sits under it, so exact counting reproduces their output; the
-    # 100-TB path stays functions/aggregates.uniq_* (HLL sketches)
+    # sits under it, so exact counting reproduces their output
     "uniq": lambda a: (
         f"count(DISTINCT {a[0]})"
         if len(a) == 1
@@ -6000,6 +6151,16 @@ FUNC_MAP: dict[str, object] = {
         else f"approx_count_distinct(struct({', '.join(a)}))"
     ),
     "uniqExact": "count(DISTINCT {*})",
+    # theta sketches are exact below their 4096-entry nominal size
+    "uniqTheta": "count(DISTINCT {*})",
+    "sumCount": "named_struct('col1', sum({0}), 'col2', count({0}))",
+    # stochasticLinearRegression shares the closed form (one feature,
+    # no SGD state)
+    "simpleLinearRegression": _LINREG_SQL,
+    "stochasticLinearRegression": _LINREG_SQL,
+    "groupArrayInsertAt": lambda a: _group_array_insert_at_expr([], a),
+    "groupArrayMovingSum": lambda a: _group_array_moving_expr([], a, False),
+    "groupArrayMovingAvg": lambda a: _group_array_moving_expr([], a, True),
     # groupArray over a literal NULL (Nullable(Nothing)) is the Null
     # adaptor's only-null result: NULL, not [] (00529)
     "groupArray": lambda a: (
@@ -6177,7 +6338,7 @@ FUNC_MAP: dict[str, object] = {
         + (a[0] if len(a) == 1 else _zip_arrays_struct(a))
         + "))))"
     ),
-    "sumMap": "map_from_arrays({0}, {1})",  # see aggregates.sum_map for the real op
+    "sumMap": "map_from_arrays({0}, {1})",
     # misc
     "e": "exp(1)", "pi": "pi()", "sqrt": "sqrt({0})", "cbrt": "cbrt({0})",
     "exp2": "pow(CAST(2 AS DOUBLE), {0})",
@@ -6341,6 +6502,8 @@ FUNC_MAP: dict[str, object] = {
         "'^(?:[^/?#@]*@)?([A-Za-z0-9-]+(?:\\.[A-Za-z0-9-]+)+)', 1), "
         "'^www\\.', '')"
     ),
+    "domain": _URL_HOST_SQL,
+    "topLevelDomain": "regexp_extract(" + _URL_HOST_SQL + ", '[.]([^.]+)$', 1)",
     "port": _port_expr,
     "errorCodeToName": _error_code_to_name_expr,
     # throwIf(cond[, message]): per-row error when cond is true, else 0
@@ -7014,6 +7177,7 @@ FUNC_MAP: dict[str, object] = {
         "(max(CAST({0} AS DOUBLE)) - min(CAST({0} AS DOUBLE))), "
         "double('nan'))"
     ),
+    "rate": _rate_expr,
     "uniqCombined64": "approx_count_distinct({*})",
     "lgamma": (
         "CAST(reflect('org.apache.commons.math3.special.Gamma', "
@@ -7189,6 +7353,21 @@ def _topk_expr(p: list[str], a: list[str]) -> str:
     return f"transform(slice({ranked}, 1, {k}), e -> e.k)"
 
 
+#: funnel-family aggregates whose first argument is a time
+_TIMED_AGGS = ("windowFunnel", "sequenceMatch", "sequenceCount")
+
+
+def _time_seconds_sql(arg: str, raw: list[str]) -> str:
+    """A funnel-family time argument as DOUBLE seconds.  A numeric
+    argument casts directly; any other (DateTime, Date, or untyped)
+    goes through TIMESTAMP, which also accepts the TIMESTAMP_NTZ and
+    DATE columns a DOUBLE cast rejects."""
+    t = _ch_type_of(raw, _TYPE_ENV_CTX.get() or _TYPE_ENV_DEFAULT)
+    if t and re.fullmatch(r"U?Int\d+|Float\d+|Decimal.*", _ch_unwrap(t)):
+        return f"CAST({arg} AS DOUBLE)"
+    return f"CAST(CAST({arg} AS TIMESTAMP) AS DOUBLE)"
+
+
 def _window_funnel_expr(p: list[str], a: list[str]) -> str:
     """windowFunnel(window)(ts, cond1..condN) as ONE aggregate expression
     (AggregateFunctionWindowFunnel.h getEventLevel): fold the
@@ -7196,13 +7375,14 @@ def _window_funnel_expr(p: list[str], a: list[str]) -> str:
     state array; level = count of reached levels (st is a monotone
     prefix).  cond0 always overwrites its slot (latest first-event is
     optimal); cond j chains when it lands within window of the level
-    j-1 chain start."""
+    j-1 chain start.  ``a[0]`` is already in seconds
+    (:func:`_time_seconds_sql`)."""
     win = p[0]
     ts, conds = a[0], a[1:]
     n = len(conds)
     entry = lambda i, c: (  # noqa: E731
-        f"if({c}, array(struct(CAST({ts} AS DOUBLE) AS t, {i} AS e)), "
-        f"slice(array(struct(CAST({ts} AS DOUBLE) AS t, {i} AS e)), 1, 0))"
+        f"if({c}, array(struct({ts} AS t, {i} AS e)), "
+        f"slice(array(struct({ts} AS t, {i} AS e)), 1, 0))"
     )
     entries = "concat(" + ", ".join(entry(i, c) for i, c in enumerate(conds)) + ")"
     events = f"array_sort(flatten(collect_list({entries})))"
@@ -7223,7 +7403,8 @@ def _window_funnel_expr(p: list[str], a: list[str]) -> str:
 
 def _seq_events_str(ts: str, conds: list[str]) -> str:
     """Sorted per-group event string for sequenceMatch/Count: one char
-    per row matching >= 1 condition, char = 97 + condition bitmask."""
+    per row matching >= 1 condition, char = 97 + condition bitmask;
+    ``ts`` is already in seconds (:func:`_time_seconds_sql`)."""
     if len(conds) > 4:
         raise DialectError("sequenceMatch supports at most 4 conditions")
     bm = " + ".join(
@@ -7231,8 +7412,8 @@ def _seq_events_str(ts: str, conds: list[str]) -> str:
     )
     pairs = (
         f"if(({bm}) > 0, "
-        f"array(struct(CAST({ts} AS DOUBLE) AS t, char(97 + ({bm})) AS c)), "
-        f"slice(array(struct(CAST({ts} AS DOUBLE) AS t, 'a' AS c)), 1, 0))"
+        f"array(struct({ts} AS t, char(97 + ({bm})) AS c)), "
+        f"slice(array(struct({ts} AS t, 'a' AS c)), 1, 0))"
     )
     return (
         f"concat_ws('', transform(array_sort(flatten(collect_list({pairs}))), "
@@ -7252,8 +7433,7 @@ def _seq_regex(pattern_lit: str, n: int) -> str:
     while i < len(pat):
         if pat.startswith("(?t", i):
             raise DialectError(
-                "sequenceMatch time conditions are not supported in SQL; "
-                "use daisy_spark.functions.timeseries.sequence_match"
+                "sequenceMatch time conditions are not supported"
             )
         if pat.startswith("(?", i):
             close = pat.index(")", i)
@@ -7547,25 +7727,9 @@ PARAMETRIC_MAP: dict[str, object] = {
         [],
         "sum",
     ),
-    # groupArrayInsertAt(default[, length])(x, pos): x placed at index
-    # pos, gaps/padding filled with default; an explicit length fixes
-    # the result size (AggregateFunctionGroupArrayInsertAt.h)
-    "groupArrayInsertAt": lambda p, a: (
-        (lambda pairs, width, dflt: (
-            f"transform(IF(({width}) < 1, array(), "
-            f"sequence(0, ({width}) - 1)), __gi -> coalesce("
-            f"element_at(filter({pairs}, __gs -> __gs.p = __gi), 1).v, "
-            f"{dflt}))"
-        ))(
-            f"array_sort(collect_list(struct(CAST({a[1]} AS INT) AS p, "
-            f"{a[0]} AS v)))",
-            p[1] if len(p) > 1 else (
-                f"element_at(array_sort(collect_list(struct("
-                f"CAST({a[1]} AS INT) AS p, {a[0]} AS v))), -1).p + 1"
-            ),
-            p[0] if p else "NULL",
-        )
-    ),
+    "groupArrayInsertAt": _group_array_insert_at_expr,
+    "groupArrayMovingSum": lambda p, a: _group_array_moving_expr(p, a, False),
+    "groupArrayMovingAvg": lambda p, a: _group_array_moving_expr(p, a, True),
     "quantileTiming": lambda p, a: _quantile_timing_expr(p, a, True),
     "quantilesTiming": lambda p, a: _quantile_timing_expr(p, a, False),
     "quantileTimingWeighted": lambda p, a: _quantile_timing_weighted_expr(p, a, True),
@@ -8823,6 +8987,14 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                     up in ("AND", "OR", "NOT")
                     and (i == 0 or not _ends_operand(toks[i - 1]))
                 )
+                # like(s, p) / ilike(s, p) where an expression starts
+                or (
+                    up in ("LIKE", "ILIKE")
+                    and (i == 0 or (
+                        not _ends_operand(toks[i - 1])
+                        and _kw(toks[i - 1]) != "NOT"
+                    ))
+                )
                 # `any(x)` is the aggregate unless it sits right after a
                 # comparison operator (`x = ANY (subq)` quantifier)
                 or (
@@ -8898,6 +9070,13 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                     hof_alv_token = _ARRAY_LAMBDA_VARS.set(
                         prev_set | formals
                     )
+            # arrayElement(arr, n) IS arr[n]: share the subscript lowering
+            if t == "arrayElement" and len(arg_parts) == 2:
+                out.append(_emit(_translate_expr(
+                    ["("] + arg_parts[0] + [")", "["] + arg_parts[1] + ["]"]
+                )))
+                i = close + 1
+                continue
             # defaultValueOfArgumentType: the TYPE default of the raw
             # argument's inferred type (FunctionDefaultValueOfArgumentType)
             # IPv6 binary must not transit a Spark string (invalid
@@ -9172,6 +9351,10 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                     out.append(f"collect_list(CAST({args2[0]} AS DOUBLE))")
                     i = close2 + 1
                     continue
+                if t_base in _TIMED_AGGS and args2:
+                    args2[0] = _time_seconds_sql(
+                        args2[0], _split_top(raw2, ",")[0]
+                    )
                 if t_base in PARAMETRIC_MAP:
                     out.append(PARAMETRIC_MAP[t_base](args, args2))  # type: ignore[operator]
                     i = close2 + 1
@@ -17549,12 +17732,20 @@ def _wrap_in_subqueries(sql_text: str) -> str:
     return sql_text
 
 
+#: a call to one of the ``ch_*`` Python UDFs some lowerings emit
+_CH_UDF_CALL_RE = re.compile(r"\bch_\w+\s*\(")
+
+
 def sql(spark, query: str):
     """Run reference-dialect SQL on a SparkSession (tables must be
     registered as views, e.g. ``catalog.load_table(...)`` passed to
     ``createOrReplaceTempView``)."""
     _SLEPT_CTX.set(False)
     res = translate(query)
+    if _CH_UDF_CALL_RE.search(res.spark_sql):
+        from daisy_spark.functions import register_udfs
+
+        register_udfs(spark)
     if res.settings:
         from daisy_spark.session import apply_settings
 

@@ -404,27 +404,10 @@ class ScriptRunner:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        # exact-hash / geo UDFs for dynamic args (functions/chhash.py,
-        # functions/chgeo.py; idempotent per session)
-        from daisy_spark.functions.chcoding import (
-            register_udfs as _coding_udfs,
-        )
-        from daisy_spark.functions.chgeo import register_udfs as _geo_udfs
-        from daisy_spark.functions.chweek import register_udfs as _week_udfs
-        from daisy_spark.functions.chh3 import register_udfs as _h3_udfs
-        from daisy_spark.functions.chhash import register_udfs
-        from daisy_spark.functions.chpoly import register_udfs as _poly_udfs
-        from daisy_spark.functions.chstats import register_udfs as _stats_udfs
-        from daisy_spark.functions.chtext import register_udfs as _text_udfs
-        _text_udfs(spark)
-        _stats_udfs(spark)
-        _coding_udfs(spark)
+        # the ch_* UDFs the dialect lowers to (idempotent per session)
+        from daisy_spark.functions import register_udfs
 
         register_udfs(spark)
-        _geo_udfs(spark)
-        _h3_udfs(spark)
-        _week_udfs(spark)
-        _poly_udfs(spark)
         self.tables: dict[str, _Table] = {}
         #: LIVE VIEW registry: name -> {toks, version, last} — evaluated
         #: lazily on read; version counts distinct-result evaluations

@@ -630,23 +630,30 @@ ORDER BY event_id
 # Time-series aggregates (SURVEY §2.4 funnel family)
 # --------------------------------------------------------------------------
 
+def _dialect(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    """Run reference-dialect SQL over the ``events`` table."""
+    from daisy_spark.plans import sql as dsql
+
+    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
+    return dsql(spark, query)
+
+
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """retention(click, purchase, error) per user
-    (AggregateFunctionRetention.h)."""
-    e = _t(spark, sf_dir, "events")
-    r = TS.retention(
-        F.col("event_type") == "click",
-        F.col("event_type") == "purchase",
-        F.col("event_type") == "error",
-    )
-    return (
-        e.groupBy("user_id")
-        .agg(
-            r[0].alias("r_click"),
-            r[1].alias("r_click_purchase"),
-            r[2].alias("r_click_error"),
+    (AggregateFunctionRetention.h), through the dialect."""
+    return _dialect(
+        spark, sf_dir,
+        """
+        SELECT user_id, r[1] AS r_click, r[2] AS r_click_purchase,
+               r[3] AS r_click_error
+        FROM (
+            SELECT user_id,
+                   retention(event_type = 'click', event_type = 'purchase',
+                             event_type = 'error') AS r
+            FROM events GROUP BY user_id
         )
-        .orderBy("user_id")
+        ORDER BY user_id
+        """,
     )
 
 
@@ -665,20 +672,21 @@ ORDER BY user_id
 
 def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """windowFunnel(1 day)(ts, click, view, purchase) per user
-    (AggregateFunctionWindowFunnel.h).
+    (AggregateFunctionWindowFunnel.h), through the dialect.
 
     Oracle expressed with min-over-qualifying-chain SQL: level k is reached
     iff there exist t1<=t2<=...<=tk with tk - t1 <= window.
     """
-    e = _t(spark, sf_dir, "events")
-    funnel = TS.window_funnel(
-        86400,
-        F.col("ts"),
-        F.col("event_type") == "click",
-        F.col("event_type") == "view",
-        F.col("event_type") == "purchase",
+    return _dialect(
+        spark, sf_dir,
+        """
+        SELECT user_id,
+               windowFunnel(86400)(ts, event_type = 'click',
+                                   event_type = 'view',
+                                   event_type = 'purchase') AS funnel_level
+        FROM events GROUP BY user_id ORDER BY user_id
+        """,
     )
-    return e.groupBy("user_id").agg(funnel.alias("funnel_level")).orderBy("user_id")
 
 
 # The greedy fold (latest viable chain-start per level) is the optimal DP
@@ -717,8 +725,8 @@ ORDER BY e.user_id
 def q_delta_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deltaSum of value in time order per user (AggregateFunctionDeltaSum.h),
     window form: lag + sum of positive diffs — spills under skew instead of
-    buffering each user's events (the collect_list fold variant is
-    TS.delta_sum, kept for bounded groups)."""
+    buffering each user's events (the dialect's deltaSum is the
+    collect_list fold, for bounded groups)."""
     e = _t(spark, sf_dir, "events")
     out = TS.delta_sum_df(e, F.col("ts"), F.col("value"), ["user_id"])
     return out.select(

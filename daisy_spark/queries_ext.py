@@ -280,15 +280,20 @@ ORDER BY bucket, rank
 
 
 def q_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sequenceMatch('(?1)(?2)'): click then later purchase, per user."""
-    e = _t(spark, sf_dir, "events")
-    m = TS.sequence_match(
-        [1, 2],
-        F.col("ts"),
-        F.col("event_type") == "click",
-        F.col("event_type") == "purchase",
+    """sequenceMatch('(?1)(?2)'): click then later purchase, per user,
+    through the dialect."""
+    from daisy_spark.plans import sql as dsql
+
+    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
+    return dsql(
+        spark,
+        """
+        SELECT user_id,
+               sequenceMatch('(?1)(?2)')(ts, event_type = 'click',
+                                         event_type = 'purchase') = 1 AS matched
+        FROM events GROUP BY user_id ORDER BY user_id
+        """,
     )
-    return e.groupBy("user_id").agg(m.alias("matched")).orderBy("user_id")
 
 
 ORACLE_SEQUENCE_MATCH = """

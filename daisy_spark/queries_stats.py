@@ -67,7 +67,8 @@ FROM m ORDER BY event_type
 def q_map_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sumMap/minMap/maxMap via the df-level scale path (map_aggs_df):
     explode + per-key partial agg, never a whole-group pair array. The
-    expression-level HOF forms stay for small in-array use + dialect."""
+    dialect's sumMap/minMap/maxMap templates are the expression-level
+    HOF forms, for small in-array use."""
     li = _t(spark, sf_dir, "lineitem")
     keys = F.array(F.lit(1), F.lit(2))
     vals = F.array(F.col("l_quantity").cast("double"), F.col("l_extendedprice").cast("double"))

@@ -134,6 +134,59 @@ def test_window_funnel_sql_form():
     assert "aggregate(array_sort(flatten(collect_list" in out
 
 
+def test_funnel_numeric_time_keeps_double_cast(spark):
+    # a numeric time argument casts straight to DOUBLE, as the reference's
+    # UInt32-timestamp funnel tests (00632) expect; chain e1 -> e2 -> e3
+    # spans 2 s, so a 1 s window stops at level 2
+    src = (
+        "(SELECT toUInt32(number + 1) AS t, toUInt32(number + 1) AS e "
+        "FROM numbers(3))"
+    )
+    q = f"SELECT windowFunnel({{w}})(t, e = 1, e = 2, e = 3) AS f FROM {src}"
+    out = translate(q.format(w=1)).spark_sql
+    assert "CAST(t AS DOUBLE)" in out and "AS TIMESTAMP" not in out
+    assert dsql(spark, q.format(w=1)).collect()[0].f == 2
+    assert dsql(spark, q.format(w=5)).collect()[0].f == 3
+
+
+def test_funnel_family_on_timestamp_ntz(spark):
+    # parquet timestamps read as TIMESTAMP_NTZ, which a DOUBLE cast rejects
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [(base + dt.timedelta(seconds=s), e) for s, e in
+         [(0, "click"), (10, "view"), (20, "click"), (90000, "view")]],
+        "ts timestamp_ntz, event_type string",
+    ).createOrReplaceTempView("ntz_events")
+    r = dsql(
+        spark,
+        "SELECT windowFunnel(60)(ts, event_type = 'click', event_type = 'view') AS f, "
+        "sequenceMatch('(?1)(?2)')(ts, event_type = 'click', event_type = 'view') AS m, "
+        "sequenceCount('(?1)(?2)')(ts, event_type = 'click', event_type = 'view') AS c "
+        "FROM ntz_events",
+    ).collect()[0]
+    assert (r.f, r.m, r.c) == (2, 1, 2)
+
+
+def test_ch_udfs_register_on_first_use(spark):
+    # a session no ScriptRunner has touched: the ch_* routines the
+    # lowerings emit must register on the first dialect query
+    fresh = spark.newSession()
+    r = dsql(
+        fresh,
+        "SELECT geohashEncode(-5.60302734375, 42.60498046875, 5) AS g, "
+        "IPv6NumToString(IPv6StringToNum('::1')) AS ip, "
+        "round(greatCircleDistance(0., 0., 0., 1.)) AS d",
+    ).collect()[0]
+    assert (r.g, r.ip, r.d) == ("ezs42", "::1", 111195.0)
+    t = dsql(
+        fresh,
+        "SELECT welchTTest(toFloat64(number), number % 2) AS w FROM numbers(10)",
+    ).collect()[0].w
+    assert len(t) == 2
+
+
 def test_pipe_float_literal_not_double_suffixed():
     out = translate(
         "SELECT value * 0.5 AS half FROM events | SELECT half"

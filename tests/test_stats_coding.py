@@ -1,21 +1,29 @@
 """Unit tests for round-2 function families: stat tests, map aggregates,
-moving windows, bitmap/geo/coding scalars (SURVEY §2.4 + §2.8)."""
+moving windows, bitmap/geo/coding scalars (SURVEY §2.4 + §2.8).  Names
+whose only implementation is the SQL dialect run through ``plans.sql``."""
 
 import math
 
 from pyspark.sql import functions as F
 
+from daisy_spark import plans
 from daisy_spark.functions import aggregates as A
 from daisy_spark.functions import scalar as S
 from daisy_spark.functions import stats as ST
 
 
+def _row(spark, select: str, source: str | None = None):
+    query = f"SELECT {select}" + (f" FROM {source}" if source else "")
+    return plans.sql(spark, query).collect()[0]
+
+
 def test_geohash_known_vector(spark):
     # canonical geohash test point: (42.605, -5.603) -> ezs42
-    r = spark.range(1).select(
-        S.geohash_encode(F.lit(-5.60302734375), F.lit(42.60498046875), 5).alias("g"),
-        S.geohash_encode(F.lit(-0.1278), F.lit(51.5074), 7).alias("lon7"),
-    ).collect()[0]
+    r = _row(
+        spark.newSession(),
+        "geohashEncode(-5.60302734375, 42.60498046875, 5) AS g, "
+        "geohashEncode(-0.1278, 51.5074, 7) AS lon7",
+    )
     assert r["g"] == "ezs42"
     assert r["lon7"].startswith("gcpv")  # London cell
 
@@ -23,40 +31,39 @@ def test_geohash_known_vector(spark):
 def test_coding_scalars(spark):
     r = spark.range(1).select(
         S.mac_num_to_string(F.lit(0x0A1B2C3D4E5F)).alias("mac"),
-        S.mac_string_to_num(F.lit("0a:1b:2c:3d:4e:5f")).alias("macn"),
         S.bitmask_to_list(F.lit(50)).alias("bits"),
-        S.ipv6_num_to_string(F.lit(bytes(range(16)))).alias("ip6"),
     ).collect()[0]
     assert r["mac"] == "0a:1b:2c:3d:4e:5f"
-    assert r["macn"] == 0x0A1B2C3D4E5F
     assert r["bits"] == "2,16,32"
+    r = _row(
+        spark,
+        "MACStringToNum('0a:1b:2c:3d:4e:5f') AS macn, IPv6NumToString("
+        "toFixedString(unhex('000102030405060708090A0B0C0D0E0F'), 16)) AS ip6",
+    )
+    assert r["macn"] == 0x0A1B2C3D4E5F
     assert r["ip6"] == "1:203:405:607:809:a0b:c0d:e0f"
 
 
 def test_bitmap_ops(spark):
-    arr = lambda *xs: F.array(*[F.lit(x) for x in xs])  # noqa: E731
-    r = spark.range(1).select(
-        S.bitmap_and(arr(1, 2, 3), arr(2, 3, 4)).alias("a"),
-        S.bitmap_or(arr(1, 2), arr(2, 3)).alias("o"),
-        S.bitmap_xor(arr(1, 2), arr(2, 3)).alias("x"),
-        S.bitmap_cardinality(arr(1, 1, 2)).alias("c"),
-        S.bitmap_has_all(arr(1, 2, 3), arr(1, 3)).alias("all_"),
-    ).collect()[0]
+    r = _row(
+        spark,
+        "bitmapToArray(bitmapAnd(bitmapBuild([1, 2, 3]), bitmapBuild([2, 3, 4]))) AS a, "
+        "bitmapToArray(bitmapOr(bitmapBuild([1, 2]), bitmapBuild([2, 3]))) AS o, "
+        "bitmapToArray(bitmapXor(bitmapBuild([1, 2]), bitmapBuild([2, 3]))) AS x, "
+        "bitmapCardinality(bitmapBuild([1, 1, 2])) AS c, "
+        "bitmapHasAll(bitmapBuild([1, 2, 3]), bitmapBuild([1, 3])) AS all_",
+    )
     assert sorted(r["a"]) == [2, 3] and sorted(r["o"]) == [1, 2, 3]
     assert sorted(r["x"]) == [1, 3] and r["c"] == 2 and r["all_"]
 
 
 def test_point_in_polygon(spark):
-    sq = F.array(
-        *[
-            F.struct(F.lit(float(a)).alias("x"), F.lit(float(b)).alias("y"))
-            for a, b in [(0, 0), (2, 0), (2, 2), (0, 2)]
-        ]
+    sq = "[(0., 0.), (2., 0.), (2., 2.), (0., 2.)]"
+    r = _row(
+        spark,
+        f"pointInPolygon((1., 1.), {sq}) AS in_, "
+        f"pointInPolygon((3., 1.), {sq}) AS out",
     )
-    r = spark.range(1).select(
-        S.point_in_polygon(F.lit(1.0), F.lit(1.0), sq).alias("in_"),
-        S.point_in_polygon(F.lit(3.0), F.lit(1.0), sq).alias("out"),
-    ).collect()[0]
     assert r["in_"] and not r["out"]
 
 
@@ -101,14 +108,17 @@ def test_ttests_match_closed_form(spark):
 
 
 def test_map_and_moving_aggs(spark):
-    out = _g(spark).groupBy("g").agg(
-        A.min_map(F.array(F.lit(1)), F.array(F.col("v"))).alias("mn"),
-        A.max_map(F.array(F.lit(1)), F.array(F.col("v"))).alias("mx"),
-        A.group_array_moving_sum("v", F.col("i"), 3).alias("mv"),
-        A.group_array_moving_avg("v", F.col("i"), 2).alias("ma"),
-        A.group_array_insert_at(F.col("v"), F.col("i")).alias("ins"),
-    ).collect()[0]
-    assert out["mn"][0]["value"] == 1.0 and out["mx"][0]["value"] == 9.0
+    # one partition in i order: the moving windows follow arrival order
+    _g(spark).coalesce(1).createOrReplaceTempView("g_src")
+    out = _row(
+        spark,
+        "minMap([1], [v]) AS mn, maxMap([1], [v]) AS mx, "
+        "groupArrayMovingSum(3)(v) AS mv, groupArrayMovingAvg(2)(v) AS ma, "
+        "groupArrayInsertAt(v, i) AS ins",
+        "g_src",
+    )
+    # (keys, values) tuples, the reference's result shape
+    assert out["mn"][1][0] == 1.0 and out["mx"][1][0] == 9.0
     assert out["mv"][:4] == [3.0, 4.0, 8.0, 6.0]
     # reference semantics: divide by window size even for partial prefixes
     assert out["ma"][0] == 1.5 and out["ma"][1] == 2.0
@@ -130,9 +140,14 @@ def test_mann_whitney_and_rank_corr(spark):
     assert abs(mw["u0"] + mw["u1"] - 25.0) < 1e-9
     rc = ST.rank_corr_df(g, "v", "v", ["g"]).collect()[0]
     assert abs(rc["rank_corr"] - 1.0) < 1e-9  # self-correlation == 1
-    civ_col = _g(spark).groupBy("g").agg(
-        A.categorical_information_value(F.col("v") > 3, "s").alias("civ")
-    ).collect()[0]["civ"]
+    # one indicator per category value; the per-indicator terms sum to
+    # the information value
+    _g(spark).createOrReplaceTempView("g_src")
+    civ_col = _row(
+        spark,
+        "arraySum(categoricalInformationValue(v > 3, v <= 3, s)) AS civ",
+        "g_src",
+    )["civ"]
     civ_df = ST.categorical_information_value_df(
         g.withColumn("c", F.col("v") > 3), "c", "s", ["g"]
     ).collect()[0]["information_value"]
@@ -140,23 +155,25 @@ def test_mann_whitney_and_rank_corr(spark):
 
 
 def test_registry_resolves(spark):
-    from daisy_spark.functions.aggregates import AGGREGATES
-    from daisy_spark.functions.scalar import FUNCTIONS
+    from test_scalar_registry import (
+        AGGREGATE_CALLS, AGGREGATE_SOURCE, SCALAR_CALLS,
+    )
 
+    fresh = spark.newSession()
     for name in [
         "minMap", "maxMap", "groupArrayMovingSum", "groupArrayInsertAt",
         "groupBitmap", "uniqTheta", "welchTTest", "studentTTest",
         "topKWeighted", "anyHeavy", "maxIntersections", "windowFunnel",
         "deltaSumTimestamp", "categoricalInformationValue",
     ]:
-        assert callable(AGGREGATES[name]), name
+        _row(fresh, AGGREGATE_CALLS[name], AGGREGATE_SOURCE)
     for name in [
         "IPv6NumToString", "MACNumToString", "bitmaskToList", "bitmapBuild",
         "bitmapXor", "greatCircleDistance", "pointInPolygon", "geohashEncode",
         "ngramDistance", "neighbor", "runningDifference", "runningAccumulate",
         "hostName", "version",
     ]:
-        assert callable(FUNCTIONS[name]), name
+        _row(fresh, SCALAR_CALLS[name])
 
 
 def test_logistic_regression_learns_separable_boundary(spark):
