@@ -52,36 +52,6 @@ def map_aggs_df(df, group_cols, keys, values, aggs):
     return per_key.groupBy(*group_cols).agg(*entries)
 
 
-def group_array_moving_sum(x, order, window: int | None = None):
-    """groupArrayMovingSum(x) ordered by ``order`` (AggregateFunctionMoving.h).
-
-    Returns array[i] = sum of the last ``window`` values up to i (all values
-    when window is None). Reference insert-order is nondeterministic; the
-    explicit order key makes this deterministic and oracle-comparable.
-    """
-    vals = F.transform(
-        F.array_sort(F.collect_list(F.struct(_c(order).alias("o"), _c(x).alias("v")))),
-        lambda s: s["v"].cast("double"),
-    )
-    if window is None:
-        # running prefix sum
-        return F.transform(
-            vals,
-            lambda v, i: F.aggregate(
-                F.slice(vals, 1, i + 1), F.lit(0.0), lambda a, b: a + b
-            ),
-        )
-    w = window
-    return F.transform(
-        vals,
-        lambda v, i: F.aggregate(
-            F.slice(vals, F.greatest(F.lit(1), i + 2 - w), F.least(i + 1, F.lit(w))),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-    )
-
-
 def group_bitmap(x):
     """groupBitmap: cardinality of the distinct-value bitmap
     (AggregateFunctionGroupBitmap.cpp returns cardinality)."""

@@ -69,54 +69,6 @@ def great_circle_distance(lon1, lat1, lon2, lat2):
     return F.lit(2.0 * 6371000.0) * F.asin(F.sqrt(a))
 
 
-def ngram_set(x, n: int = 4):
-    """Distinct character n-grams of a string (reference uses 4-grams)."""
-    s = _c(x).cast("string")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(0))),
-            lambda i: F.substring(s, i, n),
-        )
-    )
-
-
-def _const_ngram_set(s: str, n: int):
-    """Gram set of a Python-string needle, computed once at plan-build
-    time instead of per row through a transform/sequence HOF chain."""
-    grams = list(dict.fromkeys(s[i : i + n] for i in range(max(len(s) - n + 1, 0))))
-    return F.array(*[F.lit(g) for g in grams]) if grams else F.array().cast("array<string>")
-
-
-def ngram_distance(a, b, n: int = 4):
-    """ngramDistance(a, b) in [0,1]: 1 − 2·|A∩B| / (|A|+|B|) over distinct
-    4-gram sets (set-based variant of the reference's multiset symmetric
-    difference — documented simplification, same 0=identical/1=disjoint
-    contract).  A constant needle (str or foldable lit) short-circuits to
-    a literal gram array."""
-    if isinstance(b, str):
-        gb = _const_ngram_set(b, n)
-    else:
-        lit = _foldable_str(b)
-        gb = _const_ngram_set(lit, n) if lit is not None else ngram_set(b, n)
-    ga = ngram_set(a, n)
-    inter = F.size(F.array_intersect(ga, gb)).cast("double")
-    denom = (F.size(ga) + F.size(gb)).cast("double")
-    return F.when(denom == 0, F.lit(0.0)).otherwise(1.0 - 2.0 * inter / denom)
-
-
-def _foldable_str(col) -> str | None:
-    """The Python string inside F.lit('...') if col is such a literal."""
-    try:
-        expr = col._jc.expr() if hasattr(col, "_jc") else None
-        if expr is not None and expr.getClass().getSimpleName() == "Literal":
-            v = expr.value()
-            if v is not None:
-                return str(v)
-    except Exception:  # noqa: BLE001
-        return None
-    return None
-
-
 def neighbor(x, offset: int, order_by, partition_by: list | None = None, default=None):
     """neighbor(x, offset) — value at row offset away. The reference's form
     is block-local ("approximate" per its own docs); ours is the exact

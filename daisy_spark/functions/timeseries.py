@@ -1,7 +1,7 @@
 """Time-series builders the registry queries compose (SURVEY §2.4).
 
 - deltaSum(x)          src/AggregateFunctions/AggregateFunctionDeltaSum.h
-- rate / histogram     .../AggregateFunctionRate.h, ...Histogram.h
+- histogram            .../AggregateFunctionHistogram.h
 - segmentLengthSum     total covered length of [start, end] segments
 
 The funnel family (windowFunnel, retention, sequenceMatch,
@@ -45,15 +45,6 @@ def delta_sum_df(df, ts, x, group_cols: list[str], out_col: str = "delta_sum"):
             ).alias(out_col)
         )
     )
-
-
-def rate(ts: Column, x: Column) -> Column:
-    """(last - first) / (t_last - t_first) in value-per-second
-    (AggregateFunctionRate.h boundingRatio)."""
-    s = F.struct(F.unix_micros(_c(ts).cast("timestamp")).alias("t"), _c(x).cast("double").alias("v"))
-    mn, mx = F.min(s), F.max(s)
-    dt = (mx.getField("t") - mn.getField("t")).cast("double") / 1_000_000.0
-    return F.when(dt > 0, (mx.getField("v") - mn.getField("v")) / dt).alias("rate")
 
 
 def histogram_df(df, x, nbins: int, group_cols: list[str] | None = None):

@@ -771,8 +771,15 @@ def _extract_expr(a: list[str]) -> str:
 
 def _regex_group(pattern: str) -> int:
     """extract/extractAll return the first subpattern's match, or the
-    whole match when a constant pattern has no subpattern."""
-    return 0 if pattern.startswith("'") and "(" not in pattern else 1
+    whole match when a constant pattern has no capturing group."""
+    toks = tokenize(pattern)
+    if len(toks) != 1 or toks[0][:1] != "'":
+        return 1
+    lit = _ch_unescape_str(toks[0])
+    try:
+        return 1 if re.compile(lit).groups else 0
+    except re.error:  # Java-only syntax such as \p{L}
+        return 1 if "(" in lit else 0
 
 
 #: ENGINE = Join table layouts: name -> {"keys": [k1...],
@@ -7358,14 +7365,28 @@ _TIMED_AGGS = ("windowFunnel", "sequenceMatch", "sequenceCount")
 
 
 def _time_seconds_sql(arg: str, raw: list[str]) -> str:
-    """A funnel-family time argument as DOUBLE seconds.  A numeric
-    argument casts directly; any other (DateTime, Date, or untyped)
-    goes through TIMESTAMP, which also accepts the TIMESTAMP_NTZ and
-    DATE columns a DOUBLE cast rejects."""
+    """A funnel-family time argument as the DOUBLE the window counts in:
+    a number as is, a Date as its day number (the reference reads a
+    Date's raw DayNum, so the window counts days), a DateTime as epoch
+    seconds through TIMESTAMP (which also takes TIMESTAMP_NTZ, unlike a
+    DOUBLE cast).  When the type is not inferable, ``typeof`` picks the
+    same branch from Spark's type; it folds away at optimization, and
+    each branch casts only from types every branch accepts."""
     t = _ch_type_of(raw, _TYPE_ENV_CTX.get() or _TYPE_ENV_DEFAULT)
-    if t and re.fullmatch(r"U?Int\d+|Float\d+|Decimal.*", _ch_unwrap(t)):
+    base = _ch_unwrap(t) if t else ""
+    if re.fullmatch(r"U?Int\d+|Float\d+|Decimal.*", base):
         return f"CAST({arg} AS DOUBLE)"
-    return f"CAST(CAST({arg} AS TIMESTAMP) AS DOUBLE)"
+    if base in ("Date", "Date32"):
+        return f"CAST(unix_date({arg}) AS DOUBLE)"
+    secs = f"CAST(CAST({arg} AS TIMESTAMP) AS DOUBLE)"
+    if base.startswith("DateTime"):
+        return secs
+    days = f"CAST(unix_date(CAST(CAST({arg} AS TIMESTAMP) AS DATE)) AS DOUBLE)"
+    return (
+        f"CASE WHEN typeof({arg}) = 'date' THEN {days} "
+        f"WHEN typeof({arg}) IN ('timestamp', 'timestamp_ntz') THEN {secs} "
+        f"ELSE CAST(CAST({arg} AS STRING) AS DOUBLE) END"
+    )
 
 
 def _window_funnel_expr(p: list[str], a: list[str]) -> str:

@@ -28,6 +28,18 @@ from daisy_spark.operators import modifiers as M
 _t = load_table
 
 
+def _dialect(
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...], query: str
+) -> DataFrame:
+    """Run reference-dialect SQL through ``plans.sql`` with each of
+    ``tables`` registered as a view of the same name."""
+    from daisy_spark.plans import sql as dsql
+
+    for name in tables:
+        _t(spark, sf_dir, name).createOrReplaceTempView(name)
+    return dsql(spark, query)
+
+
 # --------------------------------------------------------------------------
 # Scans / filters / aggregations (SURVEY §2.1, §2.2, §2.4)
 # --------------------------------------------------------------------------
@@ -630,19 +642,11 @@ ORDER BY event_id
 # Time-series aggregates (SURVEY §2.4 funnel family)
 # --------------------------------------------------------------------------
 
-def _dialect(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """Run reference-dialect SQL over the ``events`` table."""
-    from daisy_spark.plans import sql as dsql
-
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return dsql(spark, query)
-
-
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """retention(click, purchase, error) per user
     (AggregateFunctionRetention.h), through the dialect."""
     return _dialect(
-        spark, sf_dir,
+        spark, sf_dir, ("events",),
         """
         SELECT user_id, r[1] AS r_click, r[2] AS r_click_purchase,
                r[3] AS r_click_error
@@ -678,7 +682,7 @@ def q_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff there exist t1<=t2<=...<=tk with tk - t1 <= window.
     """
     return _dialect(
-        spark, sf_dir,
+        spark, sf_dir, ("events",),
         """
         SELECT user_id,
                windowFunnel(86400)(ts, event_type = 'click',
@@ -746,16 +750,16 @@ ORDER BY user_id
 
 
 def q_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rate(): (last-first)/(t_last-t_first) per user (boundingRatio)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        # + 0.0 normalizes IEEE negative zero (tiny negative slopes round
-        # to -0.0 on one engine and +0.0 on the other otherwise)
-        .agg(
-            (F.round(TS.rate(F.col("ts"), F.col("value")), 6) + F.lit(0.0)).alias("rate")
-        )
-        .orderBy("user_id")
+    """rate(): (last-first)/(t_last-t_first) per user (boundingRatio),
+    through the dialect."""
+    # + 0.0 normalizes IEEE negative zero (tiny negative slopes round
+    # to -0.0 on one engine and +0.0 on the other otherwise)
+    return _dialect(
+        spark, sf_dir, ("events",),
+        """
+        SELECT user_id, round(rate(ts, value), 6) + 0.0 AS rate
+        FROM events GROUP BY user_id ORDER BY user_id
+        """,
     )
 
 

@@ -282,11 +282,10 @@ ORDER BY bucket, rank
 def q_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sequenceMatch('(?1)(?2)'): click then later purchase, per user,
     through the dialect."""
-    from daisy_spark.plans import sql as dsql
+    from daisy_spark.queries import _dialect
 
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return dsql(
-        spark,
+    return _dialect(
+        spark, sf_dir, ("events",),
         """
         SELECT user_id,
                sequenceMatch('(?1)(?2)')(ts, event_type = 'click',

@@ -412,20 +412,14 @@ ORDER BY doc_id
 # SQL dialect front-end (plans/dialect.py)
 # --------------------------------------------------------------------------
 
-def _register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def q_dialect_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipe-syntax query (reference: src/Parsers/parseQueryPipe.cpp) with
     reference-dialect functions, translated to Spark SQL and executed —
     the SQL front-end's flagship path."""
-    from daisy_spark.plans import sql as dsql
+    from daisy_spark.queries import _dialect
 
-    _register_views(spark, sf_dir, ("events",))
-    return dsql(
-        spark,
+    return _dialect(
+        spark, sf_dir, ("events",),
         """
         SELECT event_type, count() AS cnt, round(avg(value), 6) AS avg_value,
                uniqExact(user_id) AS uniq_users
@@ -451,11 +445,10 @@ LIMIT 10
 def q_dialect_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-dialect SQL: toStartOfHour/countIf/JSONExtractInt +
     LIMIT n BY rewrite, via the translator."""
-    from daisy_spark.plans import sql as dsql
+    from daisy_spark.queries import _dialect
 
-    _register_views(spark, sf_dir, ("events",))
-    return dsql(
-        spark,
+    return _dialect(
+        spark, sf_dir, ("events",),
         """
         SELECT toString(toStartOfHour(ts)) AS hour,
                countIf(event_type = 'purchase') AS purchases,
@@ -493,7 +486,7 @@ def q_script_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from daisy_spark.plans.script import ScriptRunner
 
-    _register_views(spark, sf_dir, ("orders",))
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     runner = ScriptRunner(spark)
     outs = runner.run_script(
         """

@@ -103,8 +103,8 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 def q_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupArrayMovingSum(3) semantics (AggregateFunctionMoving.h) on the
     windowed scale path: one shuffle on user_id, ROWS-frame running sum,
-    no per-group array (the HOF aggregate form A.group_array_moving_sum
-    remains for in-array/dialect use on bounded groups)."""
+    no per-group array (the dialect's groupArrayMovingSum is the in-array
+    form for bounded groups)."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
@@ -301,6 +301,8 @@ FROM per_cat, tot
 # --- coding / geo / ngram scalar showcase (§2.8) ----------------------------
 
 def q_scalar_coding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from daisy_spark.plans import sql as dsql
+
     e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 20)
     ip = (F.col("user_id") * 7919 + F.col("event_id")) % F.lit(4294967296)
     mac = (F.col("user_id") * 104729 + F.col("event_id")) % F.lit(281474976710656)
@@ -308,14 +310,23 @@ def q_scalar_coding(spark: SparkSession, sf_dir: str) -> DataFrame:
     lat1 = (F.col("value") % 170) - 85
     lon2 = ((F.col("value") * 3) % 360) - 180
     lat2 = ((F.col("value") * 3) % 170) - 85
-    return e.select(
+    e.select(
         "event_id",
         S.ipv4_num_to_string(ip).alias("ip4"),
         S.mac_num_to_string(mac).alias("mac"),
         S.bitmask_to_list(F.col("event_id") % 256).alias("bits"),
         _r6(S.great_circle_distance(lon1, lat1, lon2, lat2) / 1000.0).alias("dist_km"),
-        _r6(S.ngram_distance(F.col("event_type"), F.lit("purchase"))).alias("ngd"),
-    ).orderBy("event_id")
+        "event_type",
+    ).createOrReplaceTempView("scalar_coding")
+    # ngramDistance has one implementation, the dialect's
+    return dsql(
+        spark,
+        """
+        SELECT event_id, ip4, mac, bits, dist_km,
+               round(ngramDistance(event_type, 'purchase'), 6) + 0.0 AS ngd
+        FROM scalar_coding ORDER BY event_id
+        """,
+    )
 
 
 ORACLE_SCALAR_CODING = """

@@ -167,6 +167,39 @@ def test_funnel_family_on_timestamp_ntz(spark):
         "FROM ntz_events",
     ).collect()[0]
     assert (r.f, r.m, r.c) == (2, 1, 2)
+    # a Date counts in days, as the reference reads its DayNum: two
+    # consecutive days fit a window of 1, typed by Spark or by the dialect
+    spark.createDataFrame(
+        [(dt.date(2024, 1, 1), "click"), (dt.date(2024, 1, 2), "view")],
+        "d date, event_type string",
+    ).createOrReplaceTempView("date_events")
+    q = (
+        "SELECT windowFunnel(1)(d, event_type = 'click', "
+        "event_type = 'view') AS f FROM date_events"
+    )
+    assert dsql(spark, q).collect()[0].f == 2
+    q = (
+        "SELECT windowFunnel(1)(d, e = 1, e = 2) AS f FROM (SELECT "
+        "toDate('2024-01-01') + number AS d, number + 1 AS e FROM numbers(2))"
+    )
+    assert "unix_date(d)" in translate(q).spark_sql
+    assert dsql(spark, q).collect()[0].f == 2
+
+
+def test_funnel_untyped_epoch_nanos(spark):
+    # a BIGINT column the dialect cannot type stays a number: epoch
+    # nanoseconds 2 s apart miss a 1 s window and fit a 3 s one
+    t0 = 1_700_000_000_000_000_000
+    spark.createDataFrame(
+        [(t0, "click"), (t0 + 2_000_000_000, "view")],
+        "t bigint, event_type string",
+    ).createOrReplaceTempView("ns_events")
+    q = (
+        "SELECT windowFunnel({w})(t, event_type = 'click', "
+        "event_type = 'view') AS f FROM ns_events"
+    )
+    assert dsql(spark, q.format(w=1_000_000_000)).collect()[0].f == 1
+    assert dsql(spark, q.format(w=3_000_000_000)).collect()[0].f == 2
 
 
 def test_ch_udfs_register_on_first_use(spark):

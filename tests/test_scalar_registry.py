@@ -323,6 +323,11 @@ def _eval(spark, name, args):
         ("extract", lambda: "'abc123', '\\\\d+'", "123"),
         ("like", lambda: "'abc', 'a%'", True),
         ("ilike", lambda: "'ABC', 'a%'", True),
+        # no capturing group: the whole match
+        ("extract", lambda: "'xABCx', '(?i)abc'", "ABC"),
+        ("extract", lambda: "'xababy', '(?:ab)+'", "abab"),
+        ("extract", lambda: "'f(x)', '\\\\(x'", "(x"),
+        ("extractAll", lambda: "'aAbA', '(?i)a'", ["a", "A", "A"]),
     ],
 )
 def test_array_json_semantics(spark, name, make_args, expected):

@@ -78,10 +78,11 @@ def test_great_circle_distance(spark):
 
 
 def test_ngram_distance(spark):
-    r = spark.range(1).select(
-        S.ngram_distance(F.lit("hello world"), F.lit("hello world")).alias("same"),
-        S.ngram_distance(F.lit("hello world"), F.lit("zzzzzzz")).alias("diff"),
-    ).collect()[0]
+    r = _row(
+        spark,
+        "ngramDistance('hello world', 'hello world') AS same, "
+        "ngramDistance('hello world', 'zzzzzzz') AS diff",
+    )
     assert r["same"] == 0.0 and r["diff"] == 1.0
 
 
